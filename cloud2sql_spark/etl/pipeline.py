@@ -5,9 +5,17 @@ cloud2sql/collect.py:154-214): run sources -> flatten -> load destinations
 Parallelism mapping (reference A15/A16 -> Spark):
 
 - inter-source: the reference runs 4 collector threads (collect.py:186);
-  here each source is a Spark job — submit from driver threads under FAIR
-  scheduling if overlap matters, or sequentially (I/O-bound sources don't
-  contend with executor CPU).
+  here sources collect and flatten on a pool of at most 4 driver threads,
+  each tagging its jobs with a per-source FAIR pool (inert under FIFO).
+- load: each table's load is ONE Spark job — the write itself, whose
+  observed ``count`` is the table's row count (no recount of the source).
+  Parquet/CSV tables are written on a pool of at most 4 driver threads,
+  so one table's job overhead overlaps another's tasks; JDBC tables stage
+  one at a time (SQLite allows one writer, and concurrent Derby staging
+  measured no faster).
+- both pools run their targets through ``_run_in_order``: jobs keep the
+  caller's job group and local properties, results come back in order,
+  and the first failure stops every target not yet started.
 - intra-source: the reference forks per account and pools per region
   (config-template.yaml:17-32); ``distributed_collect`` re-expresses that
   as a mapInPandas fan-out over an accounts×regions task table, so fetch
@@ -16,10 +24,15 @@ Parallelism mapping (reference A15/A16 -> Spark):
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Iterator
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import CancelledError, ThreadPoolExecutor
+from functools import partial
+from typing import TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from cloud2sql_spark.etl import sinks
 from cloud2sql_spark.etl.config import FileDestination, JdbcDestination
@@ -34,6 +47,7 @@ from cloud2sql_spark.etl.model import KindCatalog
 SourceFn = Callable[[SparkSession], tuple[DataFrame, DataFrame]]
 CatalogFn = Callable[[], KindCatalog]
 SourceFactory = Callable[[dict | None], tuple[SourceFn, CatalogFn]]
+_R = TypeVar("_R")
 
 
 def _make_example_source(cfg: dict | None) -> tuple[SourceFn, CatalogFn]:
@@ -163,10 +177,24 @@ def collect(
     destination: FileDestination | JdbcDestination,
     feedback: "ProgressReporter | None" = None,
 ) -> dict[str, int]:
-    """Run every configured source, flatten, load, then promote the
-    snapshot. Returns per-table row counts (the reference's analytics
-    payload, collect.py:194-196). Any failure aborts BEFORE promotion, so
-    readers keep the previous snapshot (reference collect.py:198-212).
+    """Run every configured source, flatten, load, then promote. Returns
+    per-table row counts (the reference's analytics payload,
+    collect.py:194-196), observed on the writes themselves.
+
+    What a failure leaves behind depends on the destination:
+
+    - JDBC: every table is staged into ``tmp_<table>`` and all are
+      promoted in one swap after the last load succeeded (reference
+      collect.py:198-212), so a failure leaves readers on the whole
+      previous snapshot.
+    - Parquet: each table's versioned snapshot is promoted as soon as it
+      is written. A reader never sees a half-written table, but a failure
+      can leave some tables at the new snapshot and the rest at the old.
+    - CSV: each table's directory is overwritten in place; a failure can
+      leave a table partly written.
+
+    Any source failure aborts before anything is written, and a load
+    failure stops every table not yet started.
 
     ``feedback`` (A17): per-source and per-table progress messages, the
     reference's CoreFeedback channel (collect.py:183-189)."""
@@ -179,32 +207,20 @@ def collect(
         if name not in sources:
             raise ValueError(f"unknown source: {name}")
 
-    # A15: sources collect concurrently under a small driver-side thread
-    # pool (reference: 4 collector threads, collect.py:186). Each thread
-    # tags its Spark jobs with a per-source FAIR pool so, when
-    # spark.scheduler.mode=FAIR is set, one source's long job cannot
-    # starve the others; under FIFO the tag is inert. Any source failure
-    # propagates BEFORE staging starts, so fail-fast-no-promote (A19) is
-    # preserved exactly.
+    # A15: sources collect concurrently (reference: 4 collector threads,
+    # collect.py:186). Any source failure propagates BEFORE loading
+    # starts, so fail-fast-no-promote (A19) is preserved exactly.
     tables: dict[str, DataFrame] = {}
-    with ThreadPoolExecutor(max_workers=min(4, len(names))) as pool:
-        futures = {
-            name: pool.submit(
-                _run_source,
-                spark,
-                name,
-                sources[name],
-                config["sources"].get(name),
-                fb,
-            )
-            for name in names
-        }
-        # deterministic merge order (raises the first failure here, with
-        # every other future drained by the with-block's shutdown)
-        for name in names:
-            tables.update(futures[name].result())
+    for source_tables in _run_in_order(
+        spark,
+        [
+            partial(_run_source, spark, n, sources[n], config["sources"].get(n), fb)
+            for n in names
+        ],
+    ):
+        tables.update(source_tables)
 
-    counts: dict[str, int] = {}
+    writer = None
     if isinstance(destination, JdbcDestination):
         # fail fast with an install hint if the dialect's JDBC driver is
         # absent (reference check_db_driver, util.py:70-87)
@@ -214,24 +230,85 @@ def collect(
         writer = sinks.JdbcSnapshotWriter(
             spark, destination.url, destination.batch_size
         )
-        for i, (tname, df) in enumerate(tables.items()):
+        verb, max_workers = "staged", 1
+
+        def write(tname: str, df: DataFrame) -> None:
             writer.stage(tname, _jsonify_complex(df))
-            counts[tname] = df.count()
-            fb.progress("load", f"staged {tname} ({counts[tname]} rows)")
-            fb.progress_done("load", i + 1, len(tables))
-        writer.swap()  # atomic promote only after every load succeeded
-        fb.progress("load", "snapshot promoted")
+
     else:
-        for i, (tname, df) in enumerate(tables.items()):
+        verb, max_workers = "wrote", 4
+
+        def write(tname: str, df: DataFrame) -> None:
             path = f"{destination.path}/{tname}"
             if destination.format == "csv":
                 sinks.write_csv(_jsonify_complex(df), path)
             else:
                 sinks.write_parquet_snapshot(df, path)
-            counts[tname] = df.count()
-            fb.progress("load", f"wrote {tname} ({counts[tname]} rows)")
-            fb.progress_done("load", i + 1, len(tables))
+
+    done_lock = threading.Lock()
+    done = 0
+
+    def load(tname: str, df: DataFrame) -> int:
+        nonlocal done
+        obs = Observation()
+        write(tname, df.observe(obs, F.count(F.lit(1)).alias("rows")))
+        rows = obs.get["rows"]
+        fb.progress("load", f"{verb} {tname} ({rows} rows)")
+        with done_lock:
+            done += 1
+            fb.progress_done("load", done, len(tables))
+        return rows
+
+    rows = _run_in_order(
+        spark, [partial(load, t, df) for t, df in tables.items()], max_workers
+    )
+    counts = dict(zip(tables, rows))
+    if writer is not None:
+        writer.swap()  # atomic promote only after every load succeeded
+        fb.progress("load", "snapshot promoted")
     return counts
+
+
+def _run_in_order(
+    spark: SparkSession, targets: list[Callable[[], _R]], max_workers: int = 4
+) -> list[_R]:
+    """Run ``targets`` on at most ``max_workers`` driver threads and
+    return their results in the given order.
+
+    Each target runs under ``inheritable_thread_target(spark)``, wrapped
+    on the calling thread, so its Spark jobs carry the caller's job group,
+    description and other local properties (a bare pool thread has none,
+    and ``cancelJobGroup`` could not reach its jobs) and the session's
+    tags. Every target gets its own copy of the properties, so one may
+    set a property without racing the others.
+
+    The first failure stops every target not yet started; once the
+    running ones finish, the failure of the earliest target in the given
+    order is raised."""
+    failed = threading.Event()
+
+    def guarded(target: Callable[[], _R]) -> Callable[[], _R]:
+        # checked inside the worker, not by cancelling futures from the
+        # caller: a worker takes its next target before the caller wakes
+        # up to the failure, so cancelling would still let one more start
+        def run() -> _R:
+            if failed.is_set():
+                raise CancelledError()
+            try:
+                return target()
+            except BaseException:
+                failed.set()
+                raise
+
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max(1, min(max_workers, len(targets)))) as pool:
+        futures = [pool.submit(guarded(t)) for t in targets]
+    for f in futures:
+        err = f.exception()
+        if err is not None and not isinstance(err, CancelledError):
+            raise err
+    return [f.result() for f in futures]
 
 
 def _run_source(
@@ -241,28 +318,25 @@ def _run_source(
     source_cfg: dict | None,
     feedback: "ProgressReporter | None" = None,
 ) -> dict[str, DataFrame]:
-    """One source's collect + flatten, run on a pool thread."""
+    """One source's collect + flatten, run on a pool thread. Its jobs go
+    to a per-source FAIR pool, so under ``spark.scheduler.mode=FAIR`` one
+    source's long job cannot starve the others."""
     from cloud2sql_spark.etl.progress import NullReporter
 
     fb = feedback or NullReporter()
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", f"source-{name}")
-    try:
-        fb.progress(name, "collecting")
-        source_fn, catalog_fn = factory(source_cfg)
-        nodes, edges = source_fn(spark)
-        tables = flatten_graph(nodes, edges, catalog_fn())
-        fb.progress(name, f"collected ({len(tables)} tables)")
-        return tables
-    finally:
-        sc.setLocalProperty("spark.scheduler.pool", None)
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"source-{name}")
+    fb.progress(name, "collecting")
+    source_fn, catalog_fn = factory(source_cfg)
+    nodes, edges = source_fn(spark)
+    tables = flatten_graph(nodes, edges, catalog_fn())
+    fb.progress(name, f"collected ({len(tables)} tables)")
+    return tables
 
 
 def _jsonify_complex(df: DataFrame) -> DataFrame:
     """Complex/array/map columns -> JSON text at the flat-sink boundary
     (the reference's SqlUpdater stores complex properties as JSON [dep];
     SURVEY §1.3 'keep as StructType internally')."""
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     cols = []

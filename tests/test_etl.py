@@ -466,6 +466,173 @@ def test_failing_source_blocks_promote(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
+# Load: one Spark job per table, file tables written concurrently, fail-fast
+# ---------------------------------------------------------------------------
+
+
+def test_run_in_order_inherits_job_group(spark):
+    """Pool threads run their targets under the caller's job group, so
+    ``cancelJobGroup`` reaches every job an ETL phase starts."""
+    from cloud2sql_spark.etl.pipeline import _run_in_order
+
+    sc = spark.sparkContext
+    sc.setJobGroup("grp-A", "pool inheritance")
+    try:
+        groups = _run_in_order(
+            spark, [lambda: sc.getLocalProperty("spark.jobGroup.id")] * 6
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert groups == ["grp-A"] * 6
+
+
+def test_run_in_order_fail_fast(spark):
+    """Results come back in the given order; the first failure stops every
+    target not yet started, and the earliest failing target's error is
+    the one raised, whichever failed first in time."""
+    import threading
+    from functools import partial
+
+    from cloud2sql_spark.etl.pipeline import _run_in_order
+
+    assert _run_in_order(spark, [partial(pow, i, 2) for i in range(10)]) == [
+        i * i for i in range(10)
+    ]
+
+    started: list[int] = []
+
+    def one_worker(i: int) -> int:
+        started.append(i)
+        if i == 1:
+            raise RuntimeError("table 1 failed")
+        return i
+
+    with pytest.raises(RuntimeError, match="table 1 failed"):
+        _run_in_order(spark, [partial(one_worker, i) for i in range(5)], 1)
+    assert started == [0, 1]  # tables 2-4 never started
+
+    second_failed = threading.Event()
+
+    def first_fails_last(i: int) -> int:
+        if i == 1:
+            second_failed.set()
+            raise RuntimeError("table 1 failed")
+        assert second_failed.wait(10)
+        raise RuntimeError("table 0 failed")
+
+    with pytest.raises(RuntimeError, match="table 0 failed"):
+        _run_in_order(spark, [partial(first_fails_last, i) for i in range(2)])
+
+
+def test_load_runs_one_job_per_table(spark):
+    """Each table's load is one Spark job that also yields its row count:
+    under the caller's job group, a Parquet export runs exactly one write
+    job per table plus the flatten's own jobs (the link-pair
+    ``distinct().collect()``; the example catalog needs none) — no
+    per-table recount. The flatten jobs run on the source pool, so they
+    are only counted when pool threads inherit the job group."""
+    import shutil
+
+    sc = spark.sparkContext
+    nodes, edges = collect_example(spark)
+    sc.setJobGroup("etl-flatten", "flatten jobs")
+    try:
+        flatten_graph(nodes, edges, example_catalog())
+    finally:
+        sc._jsc.clearJobGroup()
+
+    out = os.path.join(_TMP, "one_job_per_table")
+    shutil.rmtree(out, ignore_errors=True)
+    cfg = parse_config(
+        f"sources:\n  example:\ndestinations:\n  file:\n    path: {out}\n"
+    )
+    sc.setJobGroup("etl-jobs", "parquet export")
+    try:
+        counts = collect(spark, cfg, destination_from_config(cfg))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert counts == GOLDEN_COUNTS
+    # each source's FAIR pool stays on its own pool thread
+    assert sc.getLocalProperty("spark.scheduler.pool") is None
+    # the status tracker is fed from the listener bus; let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    flatten_jobs = len(tracker.getJobIdsForGroup("etl-flatten"))
+    assert flatten_jobs == 2  # AQE: the distinct's shuffle-map and result jobs
+    etl_jobs = len(tracker.getJobIdsForGroup("etl-jobs"))
+    assert etl_jobs == len(GOLDEN_COUNTS) + flatten_jobs
+    for table, expected in GOLDEN_COUNTS.items():
+        assert spark.read.parquet(f"{out}/{table}").count() == expected, table
+
+
+def test_empty_kind_loads_empty_table(spark, monkeypatch):
+    """A catalog kind with no nodes still gets its (empty) table, and its
+    observed count is 0."""
+    import shutil
+
+    from cloud2sql_spark.etl import pipeline
+    from cloud2sql_spark.etl.model import Kind
+
+    def with_empty_kind():
+        catalog = example_catalog()
+        catalog.add(Kind("example_empty", {"empty_attribute": "string"}))
+        return catalog
+
+    monkeypatch.setitem(
+        pipeline.SOURCES, "with_empty", lambda cfg: (collect_example, with_empty_kind)
+    )
+    out = os.path.join(_TMP, "empty_kind_out")
+    shutil.rmtree(out, ignore_errors=True)
+    cfg = parse_config(
+        f"sources:\n  with_empty:\ndestinations:\n  file:\n    path: {out}\n"
+    )
+    counts = collect(spark, cfg, destination_from_config(cfg))
+    assert counts == {**GOLDEN_COUNTS, "example_empty": 0}
+    back = spark.read.parquet(f"{out}/example_empty")
+    assert back.count() == 0
+    assert "empty_attribute" in back.columns
+
+
+def test_failing_table_blocks_jdbc_promote(spark, monkeypatch):
+    """A load failure on the second table aborts the run before the swap:
+    the previous JDBC snapshot reads back unchanged. The failing run's
+    first table differs from the live one, so a swap after the failure
+    would show."""
+    import shutil
+
+    from cloud2sql_spark.etl import pipeline
+
+    first, second = example_catalog().kinds()[:2]
+
+    def failing_second_table(sp):
+        nodes, edges = collect_example(sp)
+        nodes = nodes.union(nodes.filter(F.col("kind") == first)).withColumn(
+            "payload",
+            F.when(
+                F.col("kind") == second, F.raise_error(F.lit("table 2 exploded"))
+            ).otherwise(F.col("payload")),
+        )
+        return nodes, edges
+
+    db = os.path.join(_TMP, "jdbc_table_fail")
+    shutil.rmtree(db, ignore_errors=True)
+    url = f"jdbc:derby:{db}"
+    cfg = parse_config(
+        f"sources:\n  example:\ndestinations:\n  derby:\n    url: {url};create=true\n"
+    )
+    assert collect(spark, cfg, destination_from_config(cfg)) == GOLDEN_COUNTS
+
+    monkeypatch.setitem(
+        pipeline.SOURCES, "example", lambda c: (failing_second_table, example_catalog)
+    )
+    with pytest.raises(Exception, match="table 2 exploded"):
+        collect(spark, cfg, destination_from_config(cfg))
+    for table, expected in GOLDEN_COUNTS.items():
+        back = spark.read.format("jdbc").option("url", url).option("dbtable", table)
+        assert back.load().count() == expected, table  # previous snapshot intact
+
+
+# ---------------------------------------------------------------------------
 # A17: progress/feedback channel (reference collect.py:165-189)
 # ---------------------------------------------------------------------------
 
