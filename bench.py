@@ -414,15 +414,15 @@ def main(argv: list[str] | None = None) -> None:
         # which made round-over-round per-op deltas look like regressions
         # (r2→r3 dedup_near_minhash 0.92→1.74s was pure attribution). The
         # family's true cost is shingle_build + the per-op marginals.
+        from cloud2sql_spark import memo
         from cloud2sql_spark.queries.extensions import (
             _capped_sr_meta,
             _doc_shingles,
             _exact_jaccard_pairs_shared,
             _simhash_sig_frame,
-            clear_shingle_cache,
         )
 
-        clear_shingle_cache()
+        memo.reset()
         t0 = time.time()
         _doc_shingles(spark, sf_dir, nonempty=True).count()
         _doc_shingles(spark, sf_dir).count()

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud2sql_spark.catalog import load_table
+from cloud2sql_spark.memo import session_memo, track
 from cloud2sql_spark.queries.rounding import (
     ratio_round_oracle,
     ratio_round_spark,
@@ -813,28 +814,11 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped memo, same pattern as extensions._QUANT_CACHE: the
-# degree-annotated edge list is scanned once per PageRank superstep (plus
-# once for the initial ranks), and repeated invocations in one session
-# (tests, bench trials) would otherwise persist a fresh copy each time
-# with nothing evicting the old ones.
-_PAGERANK_EDGE_CACHE: dict = {}
-_PAGERANK_EDGE_CACHE_MAX = 4
-
-# Wire into the one reset hook (extensions.clear_shingle_cache) so bench
-# trial resets and fixture-rewrite escapes clear this memo too.
-from cloud2sql_spark.queries.extensions import (  # noqa: E402
-    evict_lru,
-    register_session_cache,
-)
-
-register_session_cache(_PAGERANK_EDGE_CACHE)
-
-
 def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, d): both directions of the distinct part–supplier edge
-    list, annotated with the source's degree; persisted per
-    (session, sf_dir) with bounded eviction.
+    list, annotated with the source's degree; memoized per
+    (session, sf_dir): the list is scanned once per PageRank superstep
+    (plus once for the initial ranks).
 
     Node ids are LONGS (part pk → 2·pk, supplier sk → 2·sk+1 — the two
     key spaces interleave injectively), not the output's 'p{pk}'/'s{sk}'
@@ -843,16 +827,14 @@ def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares without allocation (guide §2.3 — narrower shuffle types).
     graph_pagerank renders the contract strings once, after the last
     iteration."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PAGERANK_EDGE_CACHE:
-        # LRU-on-access: re-insert so a hot entry is never the eviction
-        # victim while a caller may still hold its DataFrame
-        _PAGERANK_EDGE_CACHE[key] = _PAGERANK_EDGE_CACHE.pop(key)
-        return _PAGERANK_EDGE_CACHE[key]
-    # Eviction unpersists; a previously returned DataFrame still
-    # referencing the evicted entry stays CORRECT but silently degrades
-    # to recomputing the edge list per action (never an error).
-    evict_lru(_PAGERANK_EDGE_CACHE, _PAGERANK_EDGE_CACHE_MAX)
+    return session_memo(
+        spark,
+        ("pagerank", sf_dir),
+        lambda: _pagerank_edge_build(spark, sf_dir),
+    )
+
+
+def _pagerank_edge_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     e0 = li.select("l_partkey", "l_suppkey").distinct()
     fwd = e0.select(
@@ -868,9 +850,7 @@ def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning for the iteration joins. Interleaved A/B best-of-4
     # (build + 3 iterations): 2.21 -> 1.79s, ranks identical.
     w = Window.partitionBy("src")
-    out = edges.withColumn("d", F.count(F.lit(1)).over(w)).persist()
-    _PAGERANK_EDGE_CACHE[key] = out
-    return out
+    return edges.withColumn("d", F.count(F.lit(1)).over(w))
 
 
 @register(
@@ -1248,22 +1228,18 @@ def events_gap_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Persisted co-purchase edge list, session-tracked like the pagerank edge
-# cache so the one reset hook can unpersist it — an untracked persist()
-# would pin the edges in executor storage for the rest of the session.
-_TRIANGLE_EDGE_CACHE: dict = {}
-register_session_cache(_TRIANGLE_EDGE_CACHE)
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct low-id-oriented part co-purchase edges, persisted per
+    """Distinct low-id-oriented part co-purchase edges, memoized per
     (session, sf_dir): the frame feeds all three triangle join legs plus
     the node/edge stats."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TRIANGLE_EDGE_CACHE:
-        _TRIANGLE_EDGE_CACHE[key] = _TRIANGLE_EDGE_CACHE.pop(key)
-        return _TRIANGLE_EDGE_CACHE[key]
-    evict_lru(_TRIANGLE_EDGE_CACHE, 4)
+    return session_memo(
+        spark,
+        ("triangle", sf_dir),
+        lambda: _copurchase_edge_build(spark, sf_dir),
+    )
+
+
+def _copurchase_edge_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit cluster-width partitioning end to end: the orderkey hash
     # satisfies the per-order grouping below (subset-of-clustering-keys
     # rule), so the whole build runs at defaultParallelism instead of
@@ -1300,9 +1276,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("uv")
     ).select("uv.u", "uv.v")
-    e = pairs.repartition(p, "u", "v").distinct().persist()
-    _TRIANGLE_EDGE_CACHE[key] = e
-    return e
+    return pairs.repartition(p, "u", "v").distinct()
 
 
 def degree_orient_enabled() -> bool:
@@ -1311,25 +1285,16 @@ def degree_orient_enabled() -> bool:
 
 
 def _oriented_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-oriented co-purchase edges, persisted per (session, sf_dir)
-    in the same session-tracked cache as the id-oriented frame (under a
-    distinct key): like its parent, the reoriented frame feeds the
-    adjacency build, both join legs, and the node/edge stats, so an
+    """Degree-oriented co-purchase edges, memoized per (session, sf_dir)
+    under a key of its own: like its parent, the reoriented frame feeds
+    the adjacency build, both join legs, and the node/edge stats, so an
     unpersisted version would recompute the degree aggregate and both
     |V|-row joins per consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir, "oriented")
-    if key in _TRIANGLE_EDGE_CACHE:
-        _TRIANGLE_EDGE_CACHE[key] = _TRIANGLE_EDGE_CACHE.pop(key)
-        return _TRIANGLE_EDGE_CACHE[key]
-    # same 4-frame LRU bound as the parent — but evict AFTER the parent
-    # call: _copurchase_edges may itself insert on a miss, and evicting
-    # first would let that nested insert push the cache to bound+1 (the
-    # parent, inserted last, is never the eviction victim here).
-    o = _degree_orient(_copurchase_edges(spark, sf_dir))
-    evict_lru(_TRIANGLE_EDGE_CACHE, 4)
-    o = o.persist()
-    _TRIANGLE_EDGE_CACHE[key] = o
-    return o
+    return session_memo(
+        spark,
+        ("triangle", sf_dir, "oriented"),
+        lambda: _degree_orient(_copurchase_edges(spark, sf_dir)),
+    )
 
 
 def _degree_orient(e: DataFrame) -> DataFrame:
@@ -1428,9 +1393,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once under each leg (measured 1.97s -> 0.98s at sf0.1; a
     # shuffle_hash hint on the legs measured SLOWER than letting the
     # persisted side sort-merge, 1.53s, and was not applied).
-    from cloud2sql_spark.queries.extensions import _track
-
-    adj = _track(
+    adj = track(
         e.groupBy("u")
         .agg(F.sort_array(F.collect_list("v")).alias("nbrs"))
         .persist()

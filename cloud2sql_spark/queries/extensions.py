@@ -32,8 +32,10 @@ from cloud2sql_spark.checkpointing import truncate_lineage
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud2sql_spark import memo
 from cloud2sql_spark.catalog import load_table
 from cloud2sql_spark.flags import flag_enabled
+from cloud2sql_spark.memo import session_memo, track
 from cloud2sql_spark.queries.rounding import (
     ratio_round_oracle,
     ratio_round_spark,
@@ -61,109 +63,10 @@ _EXACT_JACCARD_PAIRS_SQL = f"""
 """
 
 
-# One persisted shingle frame per (session, sf_dir, nonempty): every dedup
-# op shares the index the way a production pipeline shares it. Explicit
-# memo instead of relying on Spark's cache-manager plan equality, which is
-# fragile across separately-constructed mapInPandas nodes. Bounded: a
-# long-lived session touching many sf_dirs evicts (and unpersists) the
-# oldest entries instead of accumulating executor storage forever.
-_SHINGLE_CACHE: dict = {}
-_SHINGLE_CACHE_MAX = 8
-
-# Other modules register their session-scoped persisted-frame memos here
-# (analytics' pagerank edge list) so the one reset hook clears EVERY
-# shared cache — a memo that survives the hook would serve frames whose
-# persist was dropped (bench clears between trials) or stale data after
-# a fixture rewrite.
-_EXTRA_SESSION_CACHES: list[dict] = []
-
-
-def register_session_cache(cache: dict) -> None:
-    _EXTRA_SESSION_CACHES.append(cache)
-
-
-# Per-call intermediate persists (an op's tok/prefix/posting frames) are
-# not memoized — a repeat invocation rebuilds them — but the storage they
-# pin would otherwise live until Spark's own eviction. Tracking them here
-# lets clear_shingle_cache (the bench/test reset hook) release them along
-# with the session caches (ADVICE r07). The list itself is BOUNDED: a
-# long session that never calls the reset hook (the driver's 289-key
-# sweep) must not pin every past frame's plan graph for the process
-# lifetime, so the oldest entries are unpersisted and dropped once the
-# window fills — unpersisting a frame sooner than the hook would is
-# always correctness-safe (Spark recomputes). The bound is sized so the
-# FIFO can only ever evict frames from long-completed ops: no single op
-# tracks more than ~4 frames, so an in-flight op's frames are always the
-# newest handful and a 256-deep window means ≥60 whole ops ran (and
-# collected) since an evicted frame was tracked. Eviction also logs —
-# the failure mode this guards (a still-referenced frame silently losing
-# its persist and recomputing) is a perf cliff, not a correctness bug,
-# and the log line is what makes it diagnosable (ADVICE r08).
-_EPHEMERAL_PERSISTS: list = []
-_EPHEMERAL_MAX = 256
-
-
-def _track(df: DataFrame) -> DataFrame:
-    """Register a per-call persisted frame for release by the reset hook."""
-    evicted = 0
-    while len(_EPHEMERAL_PERSISTS) >= _EPHEMERAL_MAX:
-        old = _EPHEMERAL_PERSISTS.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-        evicted += 1
-    if evicted:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "ephemeral-persist ledger full (%d): unpersisted %d oldest "
-            "frame(s); if a live op's intermediate was evicted its plan "
-            "recomputes instead of reading cache — call "
-            "clear_shingle_cache() between ops or raise _EPHEMERAL_MAX",
-            _EPHEMERAL_MAX,
-            evicted,
-        )
-    _EPHEMERAL_PERSISTS.append(df)
-    return df
-
-
-def evict_lru(cache: dict, bound: int) -> None:
-    """Pop + unpersist oldest entries until the cache is below ``bound``.
-
-    Insertion order doubles as LRU order because every cache HIT
-    re-inserts its key (pop + assign). One shared helper: this loop was
-    copy-pasted into six call sites across three modules, and one copy
-    landed with a subtly wrong placement (eviction before a nested
-    insert, letting the bound overrun) — divergence this extraction
-    prevents. Call immediately before inserting, AFTER any nested call
-    that may itself insert."""
-    while len(cache) >= bound:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-
-
-def clear_shingle_cache() -> None:
-    """Unpersist and drop every cached shared frame — shingles, quantized
-    embeddings, and any registered module cache (test/ops hook; also the
-    escape hatch when fixture files under a cached path are rewritten
-    mid-session and would otherwise serve stale data)."""
-    for cache in (_SHINGLE_CACHE, _QUANT_CACHE, *_EXTRA_SESSION_CACHES):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    for df in _EPHEMERAL_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _EPHEMERAL_PERSISTS.clear()
+# The bench/test reset hook under its old name: perfbench/worker.py:206
+# imports it from here, and perfbench/ is read-only outside a benchmark
+# change. Everything else calls memo.reset().
+clear_shingle_cache = memo.reset
 
 
 def _doc_shingles(
@@ -183,13 +86,15 @@ def _doc_shingles(
     cores (the fixture is a single file split; on a many-split lake table
     it is a cheap rebalance)."""
     # ONE Arrow pass per (session, sf_dir): the nonempty variant is a
-    # filter over the same cached frame, not a second build (the two
+    # filter over the same memoized frame, not a second build (the two
     # variants used to cost two full shingle passes per session).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SHINGLE_CACHE:
-        full = _SHINGLE_CACHE[key]
-        return full.filter(F.size("sg") > 0) if nonempty else full
-    evict_lru(_SHINGLE_CACHE, _SHINGLE_CACHE_MAX)
+    full = session_memo(
+        spark, ("shingles", sf_dir), lambda: _shingle_build(spark, sf_dir)
+    )
+    return full.filter(F.size("sg") > 0) if nonempty else full
+
+
+def _shingle_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism * 2
     base = docs.select("doc_id", "text").repartition(par)
@@ -224,9 +129,7 @@ def _doc_shingles(
                 sgs.append(sg)
             yield pd.DataFrame({"doc_id": ids, "sg": sgs})
 
-    full = base.mapInPandas(shingle, "doc_id BIGINT, sg ARRAY<STRING>").persist()
-    _SHINGLE_CACHE[key] = full
-    return full.filter(F.size("sg") > 0) if nonempty else full
+    return base.mapInPandas(shingle, "doc_id BIGINT, sg ARRAY<STRING>")
 
 
 def _tok_with_df(shingled: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -244,7 +147,7 @@ def _tok_with_df(shingled: DataFrame) -> tuple[DataFrame, DataFrame]:
     g IS NOT NULL post-filter restores identical rows. One definition
     so a fix to either hazard reaches every flagged plan at once."""
     sized = shingled.withColumn("n", F.size("sg"))
-    tok = _track(
+    tok = track(
         sized.select("doc_id", "n", F.explode_outer("sg").alias("g"))
         .filter(F.col("g").isNotNull())
         .persist()
@@ -273,7 +176,7 @@ def _exact_jaccard_pairs_shared(
     shingles — one build serves dedup_ngram_jaccard, the quality
     report's truth side and the banding curve's S-curve input."""
     flag = flag_enabled("SPARK_GRAFT_PREFIX_FILTER")
-    return _dedup_shared(
+    return session_memo(
         spark,
         ("jaccard_pairs", sf_dir, threshold, flag),
         lambda: _exact_jaccard_pairs(
@@ -338,7 +241,7 @@ def _exact_jaccard_pairs(shingled: DataFrame, threshold: float) -> DataFrame:
     # (float noise in t·n must never prune a boundary pair); exactness
     # comes from the verify step regardless.
     w = Window.partitionBy("doc_id").orderBy("df", "g")
-    prefix = _track(
+    prefix = track(
         tok.join(df_g, "g")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _prefix_len(threshold))
@@ -381,27 +284,21 @@ def _exact_jaccard_pairs(shingled: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-# Same session-scoped memo pattern as _SHINGLE_CACHE: a dozen embedding
-# ops (and several branches WITHIN ops — centroids, probes, candidate
-# sides) each re-derive the quantized frame from the parquet scan
-# otherwise; persisting it serves them all from one materialization.
-_QUANT_CACHE: dict = {}
-
-
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings quantized to integer milli-units (exact arithmetic);
-    persisted per (session, sf_dir) and shared across the embed family."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _QUANT_CACHE:
-        return _QUANT_CACHE[key]
-    evict_lru(_QUANT_CACHE, _SHINGLE_CACHE_MAX)
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 1000, 0).cast("long")
-    )
-    out = emb.select("vec_id", "label", qv.alias("v")).persist()
-    _QUANT_CACHE[key] = out
-    return out
+    memoized per (session, sf_dir): a dozen embedding ops (and several
+    branches WITHIN ops — centroids, probes, candidate sides) would each
+    re-derive it from the parquet scan otherwise."""
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        qv = F.transform(
+            "embedding",
+            lambda x: F.round(x.cast("double") * 1000, 0).cast("long"),
+        )
+        return emb.select("vec_id", "label", qv.alias("v"))
+
+    return session_memo(spark, ("quant", sf_dir), build)
 
 
 def _int_dot(a: Column | str, b: Column | str) -> Column:
@@ -428,35 +325,20 @@ def _ordered_collect(idx_col: str, val_col: str) -> Column:
 
 # ---------------------------------------------------------------- dedup
 
-# Session-scoped memos for the dedup family's shared intermediates, the
-# _SHINGLE_CACHE pattern one level up: the exact-Jaccard truth pair set
-# (consumed by dedup_ngram_jaccard, dedup_quality_report AND
-# dedup_minhash_banding_curve), the SimHash signature frame
-# (dedup_simhash + dedup_quality_report), and the df-capped candidate
-# metadata (_capped_sr_meta: dedup_ngram_capped, dedup_containment,
-# dedup_cluster_cc). Each was rebuilt — explode, df groupBy, posting
-# lists, Arrow signature pass and all — once PER CONSUMER per session
-# (measured: 3 full _capped_sr_meta builds and 3 truth builds in one
-# bench trial); a production pipeline derives each index once per
-# corpus. Cleared with the shingle cache (bench clears between trials,
-# so every trial still computes from the parquet inputs). Keys carry
-# the PREFIX_FILTER flag state so a flagged test run never serves a
-# frame built under the other plan shape.
-_DEDUP_SHARED_CACHE: dict = {}
-_EXTRA_SESSION_CACHES.append(_DEDUP_SHARED_CACHE)
+# The dedup family's shared intermediates are session-memoized: the
+# exact-Jaccard truth pair set (consumed by dedup_ngram_jaccard,
+# dedup_quality_report AND dedup_minhash_banding_curve), the SimHash
+# signature frame (dedup_simhash + dedup_quality_report), and the
+# df-capped candidate metadata (_capped_sr_meta: dedup_ngram_capped,
+# dedup_containment, dedup_cluster_cc). Each was rebuilt — explode, df
+# groupBy, posting lists, Arrow signature pass and all — once PER
+# CONSUMER per session (measured: 3 full _capped_sr_meta builds and 3
+# truth builds in one bench trial); a production pipeline derives each
+# index once per corpus. Bench resets the memo between trials, so every
+# trial still computes from the parquet inputs. Keys carry the
+# PREFIX_FILTER flag state so a flagged test run never serves a frame
+# built under the other plan shape.
 
-
-def _dedup_shared(spark: SparkSession, tag: tuple, build) -> DataFrame:
-    """Memoize ``build()``'s persisted frame under (applicationId, *tag)
-    with the LRU-on-access discipline of _LSH_BUCKET_CACHE."""
-    key = (spark.sparkContext.applicationId, *tag)
-    if key in _DEDUP_SHARED_CACHE:
-        _DEDUP_SHARED_CACHE[key] = _DEDUP_SHARED_CACHE.pop(key)
-        return _DEDUP_SHARED_CACHE[key]
-    evict_lru(_DEDUP_SHARED_CACHE, _SHINGLE_CACHE_MAX)
-    out = build().persist()
-    _DEDUP_SHARED_CACHE[key] = out
-    return out
 
 @register(
     "dedup_exact",
@@ -564,7 +446,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b in range(n_bands)
         ]
     )
-    buckets = _track(
+    buckets = track(
         sig.select("doc_id", F.posexplode(band_sigs).alias("band", "sig")).persist()
     )
     a, b = buckets.alias("a"), buckets.alias("b")
@@ -679,7 +561,7 @@ def _simhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return shingled.mapInPandas(simhash_sig, "doc_id BIGINT, s BIGINT")
 
-    return _dedup_shared(spark, ("simhash_sig", sf_dir), build)
+    return session_memo(spark, ("simhash_sig", sf_dir), build)
 
 
 @register("dedup_simhash", oracle=_SIMHASH_PAIRS_SQL)
@@ -792,7 +674,7 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("block", (F.col("vec_id") % n_blocks).cast("int"))
     )
     # persist: the B-row packed frame feeds both sides of the block-pair join
-    blocks = _track(
+    blocks = track(
         q.groupBy("block")
         .agg(F.collect_list(F.struct("vec_id", "v")).alias("vecs"))
         .persist()
@@ -987,27 +869,23 @@ _LSH_BUCKETS_SQL = f"""q AS (SELECT vec_id, {_QUANT_SQL} AS v
                        sum(CASE WHEN dot >= 0 THEN 1 << p ELSE 0 END) AS bucket
                 FROM dots GROUP BY 1, 2)"""
 
-_LSH_BUCKET_CACHE: dict = {}
-_EXTRA_SESSION_CACHES.append(_LSH_BUCKET_CACHE)
-
 
 def _lsh_bucket_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, l, bucket) for every vector under the shared hyperplane
-    tables — numpy sign-matmul per Arrow batch, persisted per
+    tables — numpy sign-matmul per Arrow batch, memoized per
     (session, sf_dir) since it feeds both sides of candidate joins in
     two operators."""
+    return session_memo(
+        spark, ("lsh", sf_dir), lambda: _lsh_bucket_build(spark, sf_dir)
+    )
+
+
+def _lsh_bucket_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import numpy as np
     import pandas as pd
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LSH_BUCKET_CACHE:
-        # LRU-on-access (the _PAGERANK_EDGE_CACHE rule): a hot entry must
-        # not be the eviction victim while a caller still holds its frame
-        _LSH_BUCKET_CACHE[key] = _LSH_BUCKET_CACHE.pop(key)
-        return _LSH_BUCKET_CACHE[key]
-    evict_lru(_LSH_BUCKET_CACHE, _SHINGLE_CACHE_MAX)
     n_tables, n_planes = 4, 8
     H = np.empty((n_tables, n_planes, 64), dtype=np.int64)
     for t in range(n_tables):
@@ -1045,11 +923,7 @@ def _lsh_bucket_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"vec_id": out_id, "l": out_l, "bucket": out_b}
             )
 
-    out = q.mapInPandas(
-        bucketize, "vec_id BIGINT, l INT, bucket BIGINT"
-    ).persist()
-    _LSH_BUCKET_CACHE[key] = out
-    return out
+    return q.mapInPandas(bucketize, "vec_id BIGINT, l INT, bucket BIGINT")
 
 
 @register(
@@ -1164,11 +1038,11 @@ def _capped_sr_meta(spark: SparkSession, sf_dir: str, df_cap: int = 10) -> DataF
     shuffles the token set twice — so the flag stays off by default;
     equivalence is property-tested in tests/test_prefix_filter.py.
 
-    Session-memoized (_DEDUP_SHARED_CACHE): three operators consume this
-    exact frame per session (ngram_capped, containment, cluster_cc via
-    ngram_capped) and each used to pay the full index build."""
+    Session-memoized: three operators consume this exact frame per
+    session (ngram_capped, containment, cluster_cc via ngram_capped) and
+    each used to pay the full index build."""
     flag = flag_enabled("SPARK_GRAFT_PREFIX_FILTER")
-    return _dedup_shared(
+    return session_memo(
         spark,
         ("sr_meta", sf_dir, df_cap, flag),
         lambda: _capped_sr_meta_build(spark, sf_dir, df_cap),
@@ -1183,7 +1057,7 @@ def _capped_sr_meta_build(
         tok, df_g = _tok_with_df(shingled)
         # rare token index: persisted because it feeds the per-doc rare
         # counts and BOTH sides of the pair self-join
-        rare_tok = _track(
+        rare_tok = track(
             tok.join(df_g.filter(F.col("df") <= df_cap), "g")
             .select("doc_id", "g")
             .persist()
@@ -1212,7 +1086,7 @@ def _capped_sr_meta_build(
             shingled.select("doc_id", F.explode_outer("sg").alias("g"))
             .filter(F.col("g").isNotNull())
         )
-        byg_all = _track(
+        byg_all = track(
             tok.groupBy("g")
             .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
             .persist()
@@ -1297,7 +1171,7 @@ def _containment_prefix_candidates(
     tok, df_g = _tok_with_df(shingled)
     # rare inverted index: tokens of df<=cap shingles only; persisted
     # because it feeds both the prefix build and the probe side
-    rare = _track(tok.join(df_g.filter(F.col("df") <= df_cap), "g").persist())
+    rare = track(tok.join(df_g.filter(F.col("df") <= df_cap), "g").persist())
     w = Window.partitionBy("doc_id").orderBy("df", "g")
     pref = rare.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= _prefix_len(threshold)

@@ -259,12 +259,10 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     form — asserted row-identical at sf0.1 pre-swap and oracle-checked
     at both SFs. Output column ORDER matches the original exactly
     (k_tuple last — it was appended by withColumn). Boundary of the
-    equivalence: a STRING-typed k ({"k": "7"}) would parse as NULL here
-    where the cast path read 7 — but that input class cannot occur in a
-    passing fixture, because the old ANSI casts THREW on any
-    non-integer k ({"k": 5.5} / {"k": true}), i.e. the fixture contract
-    is integer-typed k and both forms agree on it (NULL / malformed /
-    missing-field probed identical). A/B best-of-4: 1.22 -> 0.63s."""
+    equivalence: a STRING-typed k ({"k": "7"}) parses as NULL here where
+    the oracle's cast reads 7; tests/test_fixture_contracts.py::
+    test_events_props_k_is_never_string_typed pins that no fixture row
+    carries one. A/B best-of-4: 1.22 -> 0.63s."""
     ev = load_table(spark, sf_dir, "events")
     parsed = F.from_json("props", "k BIGINT, missing BIGINT")
     return ev.select(

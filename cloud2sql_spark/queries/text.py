@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud2sql_spark.catalog import load_table
+from cloud2sql_spark.memo import track
 from cloud2sql_spark.queries.rounding import (
     ratio_round_oracle,
     ratio_round_spark,
@@ -56,14 +57,12 @@ def text_tokenize_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, and without the persist the tokenize+explode+aggregate
     subtree runs twice — exchange reuse does not cover the two
     different downstream shapes."""
-    from cloud2sql_spark.queries.extensions import _track
-
     # repartition: the documents fixture is a single file split; spread the
     # tokenize/explode CPU across cores (no-op on a many-split lake table)
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    tf = _track(
+    tf = track(
         # explode_outer: keeps InferFiltersFromGenerate from re-running
         # split() in a pushed-down pre-filter (see _exact_jaccard_pairs)
         docs.select("doc_id", F.explode_outer(F.split("text", " ")).alias("term"))
@@ -940,8 +939,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 1.25 -> 1.38s interleaved best-of-4 — the extra instance
     aggregate + re-attach join outweigh the narrower exchange at this
     corpus, where phrases are short; the r14 window shape stands."""
-    from cloud2sql_spark.queries.extensions import _track
-
     docs = load_table(spark, sf_dir, "documents")
     pos = (
         docs.select(
@@ -970,7 +967,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("i")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    occ = _track(
+    occ = track(
         pw.select(
             "doc_id",
             "phrase_id",

@@ -668,10 +668,10 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately NOT persisted: each recompute is one pushed-down
     quarter-slice scan plus a keyed aggregate (cheap), while an
     unmanaged persist inside a lazily-returned plan leaks a cached frame
-    per invocation (the session-memo pattern exists for genuinely
-    expensive shared frames — extensions._QUANT_CACHE). The max is a
-    1-row broadcast and the equality is DECIMAL-exact, so 'ties at the
-    top' are found identically in both engines."""
+    per invocation (memo.session_memo exists for genuinely expensive
+    shared frames). The max is a 1-row broadcast and the equality is
+    DECIMAL-exact, so 'ties at the top' are found identically in both
+    engines."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-04-01"))

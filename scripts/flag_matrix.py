@@ -236,9 +236,10 @@ def main(argv: list[str] | None = None) -> int:
                 try:
                     # clear shared caches so a prior (default-path) run
                     # in this session can't serve a default-plan frame
+                    from cloud2sql_spark import memo
                     from cloud2sql_spark.queries import extensions as ext
 
-                    ext.clear_shingle_cache()
+                    memo.reset()
                     # dedup_cluster_cc consults RELIABLE_CHECKPOINT only
                     # on its distributed >2M-edge path; at gate scale the
                     # bounded union-find would run instead and the row

@@ -21,10 +21,8 @@ def main() -> None:
     if not keys:
         raise SystemExit("usage: profile_keys.py key [key ...]")
     trials = int(os.environ.get("SPARK_GRAFT_PROFILE_TRIALS", "3"))
-    from cloud2sql_spark.queries.extensions import (
-        _doc_shingles,
-        clear_shingle_cache,
-    )
+    from cloud2sql_spark import memo
+    from cloud2sql_spark.queries.extensions import _doc_shingles
     from cloud2sql_spark.registry import queries
     from cloud2sql_spark.session import get_spark
 
@@ -38,7 +36,7 @@ def main() -> None:
         registry["agg_groupby"](spark, warm_dir).collect()
     best: dict[str, float] = {}
     for trial in range(trials):
-        clear_shingle_cache()
+        memo.reset()
         t0 = time.time()
         _doc_shingles(spark, sf_dir, nonempty=True).count()
         _doc_shingles(spark, sf_dir).count()

@@ -511,12 +511,17 @@ def test_run_in_order_fail_fast(spark):
         _run_in_order(spark, [partial(one_worker, i) for i in range(5)], 1)
     assert started == [0, 1]  # tables 2-4 never started
 
+    first_started = threading.Event()
     second_failed = threading.Event()
 
     def first_fails_last(i: int) -> int:
         if i == 1:
+            # fail only once target 0 is running: a target that has not
+            # started when another fails is skipped, by design
+            assert first_started.wait(10)
             second_failed.set()
             raise RuntimeError("table 1 failed")
+        first_started.set()
         assert second_failed.wait(10)
         raise RuntimeError("table 0 failed")
 

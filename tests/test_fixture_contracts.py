@@ -140,6 +140,23 @@ def test_embeddings_are_64_dim_round_safe(duck_raw):
     )
 
 
+def test_events_props_k_is_never_string_typed(duck_raw):
+    """fn_json parses props with a typed from_json (k BIGINT), which
+    reads a STRING-typed k ({"k": "7"}) as NULL where the oracle's
+    CAST(props->>'$.k' AS BIGINT) reads 7. The two agree on integer,
+    NULL, malformed and missing k; a string-typed k is the one input
+    class they split on, so the fixture must never carry it."""
+    n = duck_raw.execute(
+        "SELECT count(*) FROM events "
+        "WHERE CASE WHEN json_valid(props) "
+        "           THEN json_type(props, '$.k') END = 'VARCHAR'"
+    ).fetchone()[0]
+    assert n == 0, (
+        f"{n} events.props rows carry a string-typed k — fn_json's "
+        "typed from_json would read NULL where the oracle reads the number"
+    )
+
+
 def test_events_ts_loads_as_timestamp(spark, sf_dir):
     """catalog.load_table must adapt to whichever physical unit the
     driver wrote this round (NANOS in r1-2, MICROS in r3+): the loaded

@@ -975,86 +975,6 @@ def test_prefix_filter_candidates_are_complete(corpus, t):
                 assert (a, b) in cand, (docs[a], docs[b], t)
 
 
-# ---------------------------------------------------------- cache eviction
-
-def test_evict_lru_bound_order_and_unpersist():
-    """The shared LRU evictor: pops oldest-first (insertion order; hits
-    re-insert), stops strictly below the bound, unpersists every victim,
-    and swallows unpersist failures."""
-    from cloud2sql_spark.queries.extensions import evict_lru
-
-    class Frame:
-        def __init__(self, fail=False):
-            self.fail = fail
-            self.unpersisted = False
-
-        def unpersist(self):
-            if self.fail:
-                raise RuntimeError("already freed")
-            self.unpersisted = True
-
-    frames = {k: Frame(fail=(k == "a")) for k in ("a", "b", "c", "d")}
-    cache = dict(frames)
-    # a "hit" on b re-inserts it at the end -> eviction order a, c, d
-    cache["b"] = cache.pop("b")
-    evict_lru(cache, 3)  # len 4 >= 3: evict a, c -> len 2 < 3
-    assert list(cache) == ["d", "b"]
-    assert frames["c"].unpersisted  # victim freed
-    assert not frames["a"].unpersisted  # its failure was swallowed
-    assert not cache["d"].unpersisted and not cache["b"].unpersisted
-    evict_lru(cache, 5)  # already below bound: no-op
-    assert list(cache) == ["d", "b"]
-
-
-def test_track_bounds_ephemeral_persists(caplog):
-    """_track keeps the per-call persist ledger bounded: once the window
-    fills, the OLDEST tracked frame is unpersisted and dropped (a long
-    session that never calls the reset hook — the driver's 289-key sweep
-    — must not pin every past frame's plan graph), eviction logs a
-    warning (an evicted-but-live frame is a silent perf cliff, ADVICE
-    r08), unpersist failures are swallowed, and clear_shingle_cache
-    still releases the survivors and empties the ledger."""
-    import logging
-
-    from cloud2sql_spark.queries import extensions as ext
-
-    class Frame:
-        def __init__(self, fail=False):
-            self.fail = fail
-            self.unpersisted = False
-
-        def unpersist(self):
-            if self.fail:
-                raise RuntimeError("already freed")
-            self.unpersisted = True
-
-    saved = list(ext._EPHEMERAL_PERSISTS)
-    ext._EPHEMERAL_PERSISTS.clear()
-    try:
-        frames = [Frame(fail=(i == 1)) for i in range(ext._EPHEMERAL_MAX + 3)]
-        with caplog.at_level(logging.WARNING, logger=ext.__name__):
-            for f in frames:
-                assert ext._track(f) is f  # passthrough contract
-        # ledger holds exactly the newest _EPHEMERAL_MAX frames
-        assert len(ext._EPHEMERAL_PERSISTS) == ext._EPHEMERAL_MAX
-        assert ext._EPHEMERAL_PERSISTS == frames[3:]
-        # the three displacements each fired the eviction warning
-        evict_logs = [r for r in caplog.records
-                      if "ephemeral-persist ledger full" in r.message]
-        assert len(evict_logs) == 3
-        # the three displaced frames were unpersisted oldest-first
-        # (frame 1's failure swallowed, not re-raised)
-        assert frames[0].unpersisted and frames[2].unpersisted
-        assert not frames[1].unpersisted
-        assert not frames[3].unpersisted  # survivors untouched
-        ext.clear_shingle_cache()
-        assert ext._EPHEMERAL_PERSISTS == []
-        assert frames[-1].unpersisted
-    finally:
-        ext._EPHEMERAL_PERSISTS.clear()
-        ext._EPHEMERAL_PERSISTS.extend(saved)
-
-
 # ------------------------------------------------- _MEAN_MILLI_6DP widening
 
 def _mean_milli_exact(s1: int, n: int) -> float:
