@@ -408,11 +408,13 @@ def main(argv: list[str] | None = None) -> None:
     # cold plan execution, not a cache read.
     per_query: dict[str, float] = {}
     for trial in range(3):
-        # Warm the shared shingle index and time it as its own line. Six
-        # dedup/text ops share this per-session persisted index; round 3
-        # charged its one-time build to whichever dedup op benched first,
-        # which made round-over-round per-op deltas look like regressions
-        # (r2→r3 dedup_near_minhash 0.92→1.74s was pure attribution). The
+        # Warm the shared shingle index and time it as its own line. Ten
+        # dedup/text ops share this per-session persisted index (listed in
+        # _doc_shingles' docstring; dedup_simhash is not one of them, its
+        # signature pass reads the text itself); round 3 charged its
+        # one-time build to whichever dedup op benched first, which made
+        # round-over-round per-op deltas look like regressions (r2→r3
+        # dedup_near_minhash 0.92→1.74s was pure attribution). The
         # family's true cost is shingle_build + the per-op marginals.
         from cloud2sql_spark import memo
         from cloud2sql_spark.queries.extensions import (
@@ -439,7 +441,9 @@ def main(argv: list[str] | None = None) -> None:
         # still rebuild nothing, and every index still derives from
         # parquet inside this timed trial. Arguments mirror the
         # consumers' call sites exactly (threshold 0.5, default df_cap)
-        # so the memo keys match.
+        # so the memo keys match. The truth and sr_meta lines ride on the
+        # shingle index warmed above; dedup_build_simhash_sig includes
+        # its own text pass.
         for bname, bfn in (
             (
                 "dedup_build_jaccard_truth",

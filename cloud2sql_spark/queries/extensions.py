@@ -84,7 +84,16 @@ def _doc_shingles(
     trailing empties exactly like Spark's split) ~3× faster end-to-end at
     10× sf0.1. The repartition spreads the CPU-heavy pass across all
     cores (the fixture is a single file split; on a many-split lake table
-    it is a cheap rebalance)."""
+    it is a cheap rebalance).
+
+    Ten keys read this memo: dedup_near_minhash, the exact-Jaccard truth
+    pairs (dedup_ngram_jaccard, dedup_minhash_banding_curve and
+    dedup_quality_report's truth arm), the df-capped index and its
+    verify join (dedup_ngram_capped, dedup_containment,
+    dedup_cluster_cc), dedup_sorted_neighborhood, text_fingerprint and
+    text_contamination. dedup_simhash does not: _simhash_sig_frame
+    repeats these shingling rules inside its own single pass, and
+    tests/test_queries.py pins its signatures to the oracle's."""
     # ONE Arrow pass per (session, sf_dir): the nonempty variant is a
     # filter over the same memoized frame, not a second build (the two
     # variants used to cost two full shingle passes per session).
@@ -337,7 +346,9 @@ def _ordered_collect(idx_col: str, val_col: str) -> Column:
 # index once per corpus. Bench resets the memo between trials, so every
 # trial still computes from the parquet inputs. Keys carry the
 # PREFIX_FILTER flag state so a flagged test run never serves a frame
-# built under the other plan shape.
+# built under the other plan shape. The truth pairs and sr_meta are built
+# over the shingles memo; the SimHash signature is not — it shingles the
+# text inside its own single Arrow pass (see _simhash_sig_frame).
 
 
 @register(
@@ -492,7 +503,17 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_jaccard_pairs_shared(spark, sf_dir, 0.5)
 
 
-_SIMHASH_PAIRS_SQL = f"""
+# SimHash band cut and pair threshold, shared by dedup_simhash, its
+# oracle and tests/test_properties.py's recall property: more bands than
+# the hamming bound means a pair within the bound leaves at least one
+# band untouched (pigeonhole), so the band-equality pre-join loses none.
+_SIMHASH_MAX_HAMMING = 10
+_SIMHASH_N_BANDS = 11
+_SIMHASH_CHUNK_BITS = -(-64 // _SIMHASH_N_BANDS)  # ceil(64 / n_bands)
+
+# The oracle's signature CTEs, ending in sig(doc_id, s): docs with no
+# shingles (NULL text, fewer than 3 words) get no row.
+_SIMHASH_SIG_SQL = f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS sg FROM w),
     t AS (SELECT doc_id, unnest(sg) AS g FROM sh WHERE len(sg) > 0),
@@ -512,10 +533,13 @@ _SIMHASH_PAIRS_SQL = f"""
                               ELSE (1::BIGINT << bit) END
                        ELSE 0 END) AS BIGINT) AS s
             FROM votes GROUP BY doc_id)
+"""
+
+_SIMHASH_PAIRS_SQL = f"""{_SIMHASH_SIG_SQL.rstrip()}
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(bit_count(xor(a.s, b.s)) AS INT) AS hamming
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.s, b.s)) <= 10
+    WHERE bit_count(xor(a.s, b.s)) <= {_SIMHASH_MAX_HAMMING}
 """
 
 
@@ -523,23 +547,46 @@ def _simhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash signature per doc (16 bytes/doc), session-memoized:
     the banded candidate join reads it from both sides (no exchange
     reuse across join branches), and dedup_quality_report re-derives the
-    identical frame for its candidate arm — one Arrow signature pass per
-    (session, sf_dir) serves all of them."""
+    identical frame for its candidate arm — one build per (session,
+    sf_dir) serves all of them.
+
+    ONE Arrow pass straight from documents(doc_id, text): the Python
+    function shingles each text by _shingle_build's rules (split(" "),
+    word trigrams, first-occurrence distinct), drops the docs that
+    nonempty=True drops (NULL text, fewer than 3 words) and runs the md5
+    nibble vote in the same loop. It does not read the shared shingle
+    memo: a Python-worker task costs ~0.27s of fixed overhead whatever
+    its row count (an 8-row mapInPandas on local[4], 4 vCPUs), and
+    shipping the shingle arrays back to Python for a second pass cost
+    more than the whole hash. One task per core
+    (defaultParallelism) runs the pass in a single wave.
+    tests/test_queries.py pins the signatures to the oracle's sig CTE."""
 
     def build() -> DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        shingled = _doc_shingles(spark, sf_dir, nonempty=True)
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        base = docs.repartition(spark.sparkContext.defaultParallelism)
 
         def simhash_sig(batches):
             import hashlib
 
+            import numpy as np
+            import pandas as pd
+
             bit_src = np.arange(64) // 4  # hex-nibble index per bit
             bit_shift = np.arange(64) % 4
             for pdf in batches:
-                sigs = np.empty(len(pdf), dtype=np.int64)
-                for j, sgs in enumerate(pdf["sg"]):
+                keep, sigs = [], []
+                for j, text in enumerate(pdf["text"]):
+                    # NULL text and <3-word docs have no shingles: no
+                    # signature row, like the oracle's len(sg) > 0
+                    if not isinstance(text, str):
+                        continue
+                    ws = text.split(" ")
+                    if len(ws) < 3:
+                        continue
+                    sgs = dict.fromkeys(
+                        " ".join(ws[i : i + 3]) for i in range(len(ws) - 2)
+                    )
                     # md5 digest bytes 0..7 hold hex chars 0..15 (hi
                     # nibble first) = the 64 signature bits the oracle
                     # extracts
@@ -556,10 +603,16 @@ def _simhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                     val = 0
                     for i in np.nonzero(votes > 0)[0]:
                         val |= 1 << int(i)
-                    sigs[j] = val - (1 << 64) if val >= 1 << 63 else val
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "s": sigs})
+                    keep.append(j)
+                    sigs.append(val - (1 << 64) if val >= 1 << 63 else val)
+                yield pd.DataFrame(
+                    {
+                        "doc_id": pdf["doc_id"].iloc[keep].to_numpy(),
+                        "s": np.array(sigs, dtype=np.int64),
+                    }
+                )
 
-        return shingled.mapInPandas(simhash_sig, "doc_id BIGINT, s BIGINT")
+        return base.mapInPandas(simhash_sig, "doc_id BIGINT, s BIGINT")
 
     return session_memo(spark, ("simhash_sig", sf_dir), build)
 
@@ -572,15 +625,18 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Signature: for each shingle, md5 hex chars 1..16 give 64 bits; each
     bit votes +1/-1; signature bit = sign of the vote sum. The signature
-    build is a vectorized Arrow-batched mapInPandas: hashlib.md5 matches
-    SQL md5 byte-for-byte, and the 64-bit voting is one numpy matrix op
-    per batch. (A pure-SQL higher-order-function fold of the same
+    build (_simhash_sig_frame) is one Arrow-batched mapInPandas straight
+    from the document text — shingling, md5 and vote in one Python pass,
+    not a pass over the shared shingle memo: hashlib.md5 matches SQL md5
+    byte-for-byte, and the 64-bit voting is one numpy matrix op per doc.
+    (A pure-SQL higher-order-function fold of the same
     computation falls out of codegen and was measured >90s for 500 docs;
     exploding (doc, shingle, bit) rows shuffles 64× the data.) Candidate
     pairs come from an 11-band equality pre-join with provably perfect
     recall at hamming <= 10 (pigeonhole over the band cut, see inline
-    comment), verified with bit_count(xor) on the packed BIGINT — never
-    an O(n²) pair scan. The signature map is embarrassingly parallel.
+    comment and _SIMHASH_N_BANDS), verified with bit_count(xor) on the
+    packed BIGINT — never an O(n²) pair scan. The signature map is
+    embarrassingly parallel.
     """
     sig = _simhash_sig_frame(spark, sf_dir)
 
@@ -592,14 +648,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with provably perfect recall, and the O(n²) pair scan becomes a keyed
     # shuffle join that partitions cleanly on a cluster. Verification then
     # computes exact hamming on the full signature per candidate.
-    n_bands = 11
-    chunk_bits = 6  # ceil(64 / n_bands)
+    chunk_bits = _SIMHASH_CHUNK_BITS
     chunks = F.array(
         *[
             F.shiftrightunsigned("s", b * chunk_bits).bitwiseAND(
                 F.lit((1 << chunk_bits) - 1)
             )
-            for b in range(n_bands)
+            for b in range(_SIMHASH_N_BANDS)
         ]
     )
     buckets = sig.select(
@@ -624,7 +679,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
     return (
         cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= 10)
+        .filter(F.col("hamming") <= _SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -1550,9 +1605,10 @@ def dedup_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     computable end-to-end because BOTH detectors are deterministic and
     oracle-replicable. One full-outer join on the pair key classifies
     every pair as hit / miss / false-candidate; the single-row summary
-    aggregates globally. Cost is the two upstream detectors (which share
-    the session shingle cache) plus one keyed join over their outputs —
-    pair lists orders of magnitude smaller than the corpus."""
+    aggregates globally. Cost is the two upstream detectors (the truth
+    pairs over the session shingle memo, the SimHash signature from its
+    own text pass; both memoized) plus one keyed join over their outputs
+    — pair lists orders of magnitude smaller than the corpus."""
     truth = dedup_ngram_jaccard(spark, sf_dir).select(
         "doc_a", "doc_b", F.lit(1).alias("in_truth")
     )

@@ -1207,3 +1207,26 @@ def test_lpa_final_round_is_not_checkpointed(spark, sf_dir):
     once just to be re-read (the pre-r15 extra pass)."""
     plan = _physical(_QUERIES["graph_label_propagation"](spark, sf_dir))
     assert "Join" in plan, plan
+
+
+def test_simhash_signature_is_one_python_pass_over_documents(spark, sf_dir):
+    """_simhash_sig_frame shingles and hashes in ONE mapInPandas straight
+    from documents: a cold build plans exactly one Python map node (AQE
+    prints each node under both its initial and final plan, so nodes are
+    told apart by the UDF's expression id) over a documents scan, and it
+    never builds the shared shingle memo."""
+    from cloud2sql_spark import memo
+    from cloud2sql_spark.queries.extensions import _simhash_sig_frame
+
+    memo.reset()
+    try:
+        sig = _simhash_sig_frame(spark, sf_dir)
+        sig.count()
+        plan = _physical(sig)
+        node = r"MapIn(?:Pandas|Arrow) \w+\([^)]*\)#\d+"
+        nodes = set(re.findall(node, plan))
+        assert len(nodes) == 1, plan
+        assert "documents.parquet" in plan, plan
+        assert ("shingles", sf_dir) not in [k[1:] for k in memo._MEMO]
+    finally:
+        memo.reset()

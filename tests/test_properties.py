@@ -12,11 +12,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cloud2sql_spark.etl.config import normalize_s3_url
+from cloud2sql_spark.queries.extensions import (
+    _SIMHASH_CHUNK_BITS as CHUNK_BITS,
+    _SIMHASH_MAX_HAMMING as MAX_HAMMING,
+    _SIMHASH_N_BANDS as N_BANDS,
+)
 
 # ---------------------------------------------------------------- simhash
 
-N_BANDS = 11
-CHUNK_BITS = 6  # must match queries/extensions.py dedup_simhash
 MASK64 = (1 << 64) - 1
 
 
@@ -29,12 +32,15 @@ def _bands(sig: int) -> list[int]:
 
 @given(
     sig=st.integers(min_value=0, max_value=MASK64),
-    flip_positions=st.sets(st.integers(min_value=0, max_value=63), max_size=10),
+    flip_positions=st.sets(
+        st.integers(min_value=0, max_value=63), max_size=MAX_HAMMING
+    ),
 )
 @settings(max_examples=500, deadline=None)
 def test_simhash_band_recall_guarantee(sig, flip_positions):
-    """Any pair at hamming distance <= 10 MUST share at least one band —
-    the pigeonhole guarantee that makes the equality pre-join exact."""
+    """Any pair within dedup_simhash's hamming bound MUST share at least
+    one band — the pigeonhole guarantee that makes the equality pre-join
+    exact. The bound and the band cut are the query's own constants."""
     other = sig
     for p in flip_positions:
         other ^= 1 << p
@@ -47,7 +53,7 @@ def test_simhash_band_recall_guarantee(sig, flip_positions):
 
 
 def test_simhash_bands_cover_all_bits():
-    """The 11 bands must cover every one of the 64 bits — an uncovered bit
+    """The bands must cover every one of the 64 bits — an uncovered bit
     would let two different signatures share ALL bands."""
     covered = set()
     for b in range(N_BANDS):

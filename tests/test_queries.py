@@ -111,6 +111,64 @@ def test_asof_same_ts_strict(spark, tmp_path):
         con.close()
 
 
+def test_simhash_signature_matches_oracle_sig_cte(spark, tmp_path):
+    """_simhash_sig_frame shingles the text inside its own Arrow pass, a
+    copy of _doc_shingles' rules. Pin it per doc to the oracle's sig CTE
+    on a corpus built to hit every rule: NULL text, '', a 2-word text,
+    double and trailing spaces (empty words are words on both engines),
+    a 3-word text of empties, a repeated trigram (distinct before the
+    vote) and non-ASCII words (md5 over UTF-8). Docs without shingles
+    must have no signature on either side."""
+    import duckdb
+    import pandas as pd
+
+    from cloud2sql_spark import memo
+    from cloud2sql_spark.queries.extensions import (
+        _SIMHASH_SIG_SQL,
+        _simhash_sig_frame,
+    )
+
+    texts = [
+        None,
+        "",
+        "two words",
+        "a b ",
+        "  ",
+        "alpha  beta gamma delta",
+        "alpha beta gamma delta ",
+        "alpha beta gamma delta",
+        "x y z x y z x y z",
+        "one two three",
+        "café naïve über straße 東京 タワー",
+        "the quick brown fox jumps over the lazy dog " * 3,
+    ]
+    docs = pd.DataFrame(
+        {
+            "doc_id": range(100, 100 + len(texts)),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["web"] * len(texts),
+            "n_chars": [len(t or "") for t in texts],
+        }
+    )
+    sf = str(tmp_path)
+    docs.to_parquet(f"{sf}/documents.parquet")
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{sf}/documents.parquet')"
+        )
+        sig_sql = f"{_SIMHASH_SIG_SQL} SELECT doc_id, s FROM sig"
+        want = dict(con.execute(sig_sql).fetchall())
+        got = dict(_simhash_sig_frame(spark, sf).collect())
+    finally:
+        con.close()
+        memo.reset()
+    assert set(want) == {103, 104, 105, 106, 107, 108, 109, 110, 111}
+    assert got == want
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
