@@ -20,8 +20,9 @@ schema-inference pre-pass over what may be terabytes of export;
 ``get_json_object('$.payload')`` returns the raw JSON text for an object
 and the decoded string for a string payload, so both shapes land in the
 same STRING column that the flatten step parses with the kind's
-StructType. kinds.json is read through Spark's text reader (works on any
-filesystem) and collected — bounded by the number of kinds, not data.
+StructType. kinds.json is read on the driver through Hadoop's FileSystem
+API (works on any filesystem, runs no Spark job) — bounded by the number
+of kinds, not data.
 """
 
 from __future__ import annotations
@@ -56,9 +57,15 @@ def read_graph(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 
 
 def read_catalog(spark: SparkSession, path: str) -> KindCatalog:
-    """kinds.json -> KindCatalog (driver-side; bounded by kind count)."""
-    lines = spark.read.text(os.path.join(path, "kinds.json")).collect()
-    doc = json.loads("\n".join(r["value"] for r in lines))
+    """kinds.json -> KindCatalog, read on the driver through Hadoop's
+    FileSystem API: any Hadoop URI works and no Spark job runs."""
+    jvm = spark._jvm
+    file = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "kinds.json"))
+    stream = file.getFileSystem(spark._jsc.hadoopConfiguration()).open(file)
+    try:
+        doc = json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
     return KindCatalog(
         [Kind(name, props or {}) for name, props in sorted(doc["kinds"].items())]
     )

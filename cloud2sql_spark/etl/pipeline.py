@@ -7,12 +7,16 @@ Parallelism mapping (reference A15/A16 -> Spark):
 - inter-source: the reference runs 4 collector threads (collect.py:186);
   here sources collect and flatten on a pool of at most 4 driver threads,
   each tagging its jobs with a per-source FAIR pool (inert under FIFO).
-- load: each table's load is ONE Spark job — the write itself, whose
-  observed ``count`` is the table's row count (no recount of the source).
-  Parquet/CSV tables are written on a pool of at most 4 driver threads,
-  so one table's job overhead overlaps another's tasks; JDBC tables stage
-  one at a time (SQLite allows one writer, and concurrent Derby staging
-  measured no faster).
+- load: each kind table's load is ONE Spark job — the write itself,
+  whose observed ``count`` is the table's row count (no recount of the
+  source). Parquet/CSV tables are written on a pool of at most 4 driver
+  threads, so one table's job overhead overlaps another's tasks; JDBC
+  tables stage one at a time (SQLite allows one writer, and concurrent
+  Derby staging measured no faster).
+- links: on Parquet, ONE partitioned write per source holds every link
+  table, and the per-pair counts come from its footers, so the pairs are
+  never discovered. JDBC/CSV load one table per pair; the pair discovery
+  (two jobs) runs on a side thread while the kind tables load.
 - both pools run their targets through ``_run_in_order``: jobs keep the
   caller's job group and local properties, results come back in order,
   and the first failure stops every target not yet started.
@@ -37,7 +41,14 @@ from pyspark.util import inheritable_thread_target
 from cloud2sql_spark.etl import sinks
 from cloud2sql_spark.etl.config import FileDestination, JdbcDestination
 from cloud2sql_spark.etl.example_source import collect_example, example_catalog
-from cloud2sql_spark.etl.flatten import flatten_graph
+# flatten_graph is not called here, but the benchmark's tracer
+# (perfbench/worker.py) wraps it on this module
+from cloud2sql_spark.etl.flatten import (  # noqa: F401
+    flatten_graph,
+    flatten_nodes,
+    link_table_name,
+    link_tables,
+)
 from cloud2sql_spark.etl.model import KindCatalog
 
 # source registry (reference A2: entry-points discovery collect.py:48-71;
@@ -181,20 +192,37 @@ def collect(
     per-table row counts (the reference's analytics payload,
     collect.py:194-196), observed on the writes themselves.
 
+    How link tables are loaded depends on the destination:
+
+    - Parquet: each source's edges are written once, partitioned by
+      (from_kind, to_kind), into ``<dest>/_links.versions/<uuid>``; every
+      partition directory becomes the ``link_<from>_<to>`` snapshot, and
+      its row count comes from the Parquet footers. No pair discovery
+      runs, and the link write shares the kind tables' load pool.
+    - JDBC and CSV: one table per pair. The pairs are discovered
+      (``link_tables``) on a side thread while the kind tables load, and
+      the link tables load after them.
+
+    Where two sources emit the same kind or pair, the later source (in
+    name order) wins.
+
     What a failure leaves behind depends on the destination:
 
     - JDBC: every table is staged into ``tmp_<table>`` and all are
       promoted in one swap after the last load succeeded (reference
       collect.py:198-212), so a failure leaves readers on the whole
       previous snapshot.
-    - Parquet: each table's versioned snapshot is promoted as soon as it
-      is written. A reader never sees a half-written table, but a failure
-      can leave some tables at the new snapshot and the rest at the old.
+    - Parquet: each kind table's versioned snapshot is promoted as soon as
+      it is written, and the link tables once every load succeeded. A
+      reader never sees a half-written table, but a failure can leave some
+      tables at the new snapshot and the rest at the old.
     - CSV: each table's directory is overwritten in place; a failure can
       leave a table partly written.
 
     Any source failure aborts before anything is written, and a load
-    failure stops every table not yet started.
+    failure stops every table not yet started. An edge with a NULL or
+    empty kind raises ``ValueError`` before any link table is promoted
+    or the JDBC swap runs.
 
     ``feedback`` (A17): per-source and per-table progress messages, the
     reference's CoreFeedback channel (collect.py:183-189)."""
@@ -210,17 +238,19 @@ def collect(
     # A15: sources collect concurrently (reference: 4 collector threads,
     # collect.py:186). Any source failure propagates BEFORE loading
     # starts, so fail-fast-no-promote (A19) is preserved exactly.
-    tables: dict[str, DataFrame] = {}
-    for source_tables in _run_in_order(
+    kinds: dict[str, DataFrame] = {}
+    edges: list[DataFrame] = []
+    for source_kinds, source_edges in _run_in_order(
         spark,
         [
             partial(_run_source, spark, n, sources[n], config["sources"].get(n), fb)
             for n in names
         ],
     ):
-        tables.update(source_tables)
+        kinds.update(source_kinds)
+        edges.append(source_edges)
 
-    writer = None
+    writer, parquet = None, False
     if isinstance(destination, JdbcDestination):
         # fail fast with an install hint if the dialect's JDBC driver is
         # absent (reference check_db_driver, util.py:70-87)
@@ -237,36 +267,95 @@ def collect(
 
     else:
         verb, max_workers = "wrote", 4
+        parquet = destination.format != "csv"
 
         def write(tname: str, df: DataFrame) -> None:
             path = f"{destination.path}/{tname}"
-            if destination.format == "csv":
-                sinks.write_csv(_jsonify_complex(df), path)
-            else:
+            if parquet:
                 sinks.write_parquet_snapshot(df, path)
+            else:
+                sinks.write_csv(_jsonify_complex(df), path)
 
     done_lock = threading.Lock()
-    done = 0
+    done, total = 0, len(kinds)
 
-    def load(tname: str, df: DataFrame) -> int:
+    def loaded(tname: str, rows: int) -> None:
         nonlocal done
-        obs = Observation()
-        write(tname, df.observe(obs, F.count(F.lit(1)).alias("rows")))
-        rows = obs.get["rows"]
         fb.progress("load", f"{verb} {tname} ({rows} rows)")
         with done_lock:
             done += 1
-            fb.progress_done("load", done, len(tables))
+            fb.progress_done("load", done, total)
+
+    def load(tname: str, df: DataFrame) -> int:
+        df, obs = _observed(df)
+        write(tname, df)
+        rows = obs.get["rows"]
+        loaded(tname, rows)
         return rows
 
+    kind_loads = [partial(load, t, df) for t, df in kinds.items()]
+    if parquet:
+        versions_root = f"{destination.path}/_links.versions"
+        # the link writes go first: each holds every pair of its source
+        results = _run_in_order(
+            spark,
+            [partial(_write_links, e, versions_root) for e in edges] + kind_loads,
+            max_workers,
+        )
+        counts = dict(zip(kinds, results[len(edges) :]))
+        links: dict[str, tuple[str, int]] = {}
+        for source_links in results[: len(edges)]:
+            links.update(source_links)
+        sinks.promote_partitions(
+            destination.path, {t: leaf for t, (leaf, _) in links.items()}, versions_root
+        )
+        total += len(links)
+        for tname, (_, rows) in sorted(links.items()):
+            counts[tname] = rows
+            loaded(tname, rows)
+        return counts
+
+    # pair discovery runs beside the kind loads, off their critical path
+    with ThreadPoolExecutor(1) as side:
+        discovery = side.submit(
+            inheritable_thread_target(spark)(lambda: [link_tables(e) for e in edges])
+        )
+        counts = dict(zip(kinds, _run_in_order(spark, kind_loads, max_workers)))
+        link_dfs: dict[str, DataFrame] = {}
+        for source_links in discovery.result():
+            link_dfs.update(source_links)
+    total += len(link_dfs)
     rows = _run_in_order(
-        spark, [partial(load, t, df) for t, df in tables.items()], max_workers
+        spark, [partial(load, t, df) for t, df in link_dfs.items()], max_workers
     )
-    counts = dict(zip(tables, rows))
+    counts.update(zip(link_dfs, rows))
     if writer is not None:
         writer.swap()  # atomic promote only after every load succeeded
         fb.progress("load", "snapshot promoted")
     return counts
+
+
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an observed row count: once an action ran on the
+    returned frame, ``obs.get["rows"]`` holds it, with no second job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _write_links(edges: DataFrame, versions_root: str) -> dict[str, tuple[str, int]]:
+    """Every link table of one source in one Parquet write, partitioned by
+    pair; returns link table name -> (partition directory, row count).
+    Nothing is promoted. The footer counts must add up to the rows the
+    write observed."""
+    df, obs = _observed(edges.select("from_id", "to_id", "from_kind", "to_kind"))
+    parts = sinks.write_partitioned_version(df, versions_root, ("from_kind", "to_kind"))
+    footer_rows = sum(rows for _, rows in parts.values())
+    if footer_rows != obs.get["rows"]:
+        raise RuntimeError(
+            f"link partitions under {versions_root} hold {footer_rows} rows "
+            f"by their footers, but the write observed {obs.get['rows']}"
+        )
+    return {link_table_name(*pair): leaf_rows for pair, leaf_rows in parts.items()}
 
 
 def _run_in_order(
@@ -317,10 +406,12 @@ def _run_source(
     factory: SourceFactory,
     source_cfg: dict | None,
     feedback: "ProgressReporter | None" = None,
-) -> dict[str, DataFrame]:
-    """One source's collect + flatten, run on a pool thread. Its jobs go
-    to a per-source FAIR pool, so under ``spark.scheduler.mode=FAIR`` one
-    source's long job cannot starve the others."""
+) -> tuple[dict[str, DataFrame], DataFrame]:
+    """One source's collect + kind flatten, run on a pool thread: its kind
+    tables and its edges (``collect`` turns those into link tables). Its
+    jobs go to a per-source FAIR pool, so under
+    ``spark.scheduler.mode=FAIR`` one source's long job cannot starve the
+    others."""
     from cloud2sql_spark.etl.progress import NullReporter
 
     fb = feedback or NullReporter()
@@ -328,9 +419,9 @@ def _run_source(
     fb.progress(name, "collecting")
     source_fn, catalog_fn = factory(source_cfg)
     nodes, edges = source_fn(spark)
-    tables = flatten_graph(nodes, edges, catalog_fn())
-    fb.progress(name, f"collected ({len(tables)} tables)")
-    return tables
+    kinds = flatten_nodes(nodes, catalog_fn())
+    fb.progress(name, f"collected ({len(kinds)} kinds)")
+    return kinds, edges
 
 
 def _jsonify_complex(df: DataFrame) -> DataFrame:

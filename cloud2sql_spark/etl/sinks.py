@@ -14,6 +14,9 @@ Spark re-expression:
   A lakehouse catalog (Delta/Iceberg) would use ``CREATE OR REPLACE TABLE``;
   those jars are not in this container, so the symlink protocol is the
   portable equivalent and carries the same reader guarantee.
+- Link tables on Parquet: one write partitioned by (from_kind, to_kind)
+  into a shared versioned directory; each partition directory is promoted
+  behind its own symlink by the same atomic replace.
 - JDBC: staged ``tmp_<table>`` + transactional rename, mirroring the
   reference's SqlUpdater protocol (dialect-specific rename SQL).
 """
@@ -21,6 +24,7 @@ Spark re-expression:
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 
@@ -47,7 +51,16 @@ def write_parquet_snapshot(df: DataFrame, target: str) -> str:
     os.makedirs(versions_root, exist_ok=True)
     version_dir = os.path.join(versions_root, uuid.uuid4().hex)
     df.write.mode("overwrite").parquet(version_dir)
+    promote_snapshot(version_dir, base)
+    retire_versions(versions_root, [base])
+    return version_dir
 
+
+def promote_snapshot(version_dir: str, target: str) -> None:
+    """Atomically point the symlink ``target`` at ``version_dir``: a reader
+    resolving ``target`` sees the old version until the one ``os.replace``
+    (``os.replace`` of a symlink is atomic on POSIX)."""
+    base = target.rstrip("/")
     tmp_link = base + ".swap." + uuid.uuid4().hex
     os.symlink(version_dir, tmp_link)
     if os.path.isdir(base) and not os.path.islink(base):
@@ -56,13 +69,87 @@ def write_parquet_snapshot(df: DataFrame, target: str) -> str:
         shutil.rmtree(base)
     os.replace(tmp_link, base)
 
-    # retire superseded versions (keep current)
-    current = os.path.realpath(base)
+
+def retire_versions(versions_root: str, live: list[str]) -> None:
+    """Delete every version under ``versions_root`` that none of the
+    ``live`` paths resolves into (a live path may point at a version or at
+    a directory inside one)."""
+    resolved = [os.path.realpath(p) for p in live]
     for name in os.listdir(versions_root):
-        path = os.path.join(versions_root, name)
-        if os.path.realpath(path) != current:
-            shutil.rmtree(path, ignore_errors=True)
-    return version_dir
+        version = os.path.realpath(os.path.join(versions_root, name))
+        if not any(r == version or r.startswith(version + os.sep) for r in resolved):
+            shutil.rmtree(version, ignore_errors=True)
+
+
+def write_partitioned_version(
+    df: DataFrame, versions_root: str, by: tuple[str, ...]
+) -> dict[tuple[str | None, ...], tuple[str, int]]:
+    """Write ``df`` once, partitioned by the columns ``by``, into a fresh
+    version directory under ``versions_root``; promote nothing.
+
+    Returns, per partition, its values, its leaf directory and its row
+    count. The values are unescaped from the directory names (Spark writes
+    them ``%XX``-escaped); a NULL or empty value, which Spark writes to its
+    default partition, comes back as ``None``. Row counts are read from
+    the Parquet footers on the driver: counting runs no Spark job.
+    """
+    version_dir = os.path.join(versions_root, uuid.uuid4().hex)
+    df.write.partitionBy(*by).parquet(version_dir)
+    return {
+        values: (leaf, _footer_rows(leaf))
+        for leaf, values in _partition_dirs(version_dir, len(by))
+    }
+
+
+# Spark's (Hive's) directory for a NULL or empty partition value
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_dirs(root: str, depth: int):
+    """(leaf directory, partition values) for every ``col=value`` path
+    ``depth`` levels below ``root``."""
+    if depth == 0:
+        yield root, ()
+        return
+    for name in sorted(os.listdir(root)):
+        path = os.path.join(root, name)
+        if "=" in name and os.path.isdir(path):
+            raw = name.split("=", 1)[1]
+            # the inverse of Spark's escapePathName: each %XX is one char
+            value = re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), raw)
+            for leaf, rest in _partition_dirs(path, depth - 1):
+                yield leaf, (None if raw == _DEFAULT_PARTITION else value, *rest)
+
+
+def _footer_rows(leaf: str) -> int:
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(leaf, name)).num_rows
+        for name in os.listdir(leaf)
+        if not name.startswith((".", "_"))
+    )
+
+
+def promote_partitions(
+    dest: str, targets: dict[str, str], versions_root: str
+) -> None:
+    """Point each ``dest/<name>`` at its partition directory
+    ``targets[name]``, one atomic replace per name, as
+    ``write_parquet_snapshot`` does for a whole table.
+
+    Only after every name is promoted, delete each version under
+    ``versions_root`` that no live link in ``dest`` resolves into. A
+    failure part-way therefore leaves every link readable, at its old or
+    its new version. A promoted name's own ``<name>.versions`` directory
+    (from a table once written by ``write_parquet_snapshot``) is deleted
+    once the name points elsewhere."""
+    for name, leaf in targets.items():
+        target = os.path.join(dest, name)
+        promote_snapshot(leaf, target)
+        shutil.rmtree(target + ".versions", ignore_errors=True)
+    links = [os.path.join(dest, n) for n in os.listdir(dest)]
+    retire_versions(versions_root, [p for p in links if os.path.islink(p)])
 
 
 class JdbcSnapshotWriter:

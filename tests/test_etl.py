@@ -25,7 +25,7 @@ from cloud2sql_spark.etl.example_source import (
     collect_example,
     example_catalog,
 )
-from cloud2sql_spark.etl.flatten import flatten_graph
+from cloud2sql_spark.etl.flatten import flatten_graph, link_tables
 from cloud2sql_spark.etl.pipeline import collect, distributed_collect
 
 _TMP = os.path.join(tempfile.gettempdir(), "cloud2sql_spark", "etl_tests")
@@ -529,45 +529,109 @@ def test_run_in_order_fail_fast(spark):
         _run_in_order(spark, [partial(first_fails_last, i) for i in range(2)])
 
 
-def test_load_runs_one_job_per_table(spark):
-    """Each table's load is one Spark job that also yields its row count:
-    under the caller's job group, a Parquet export runs exactly one write
-    job per table plus the flatten's own jobs (the link-pair
-    ``distinct().collect()``; the example catalog needs none) — no
-    per-table recount. The flatten jobs run on the source pool, so they
-    are only counted when pool threads inherit the job group."""
-    import shutil
+def _edges_source(extra_edges: list[tuple]):
+    """Source factory: the example graph plus ``extra_edges`` rows of
+    (from_id, to_id, from_kind, to_kind)."""
+    from cloud2sql_spark.etl.example_source import EDGES_SCHEMA
 
+    def source_fn(sp):
+        nodes, edges = collect_example(sp)
+        return nodes, edges.union(sp.createDataFrame(extra_edges, EDGES_SCHEMA))
+
+    return lambda cfg: (source_fn, example_catalog)
+
+
+def _parquet_cfg(out: str):
+    return parse_config(
+        f"sources:\n  example:\ndestinations:\n  file:\n    path: {out}\n"
+    )
+
+
+def _derby_cfg(db: str):
+    return parse_config(
+        "sources:\n  example:\ndestinations:\n  derby:\n"
+        f"    url: jdbc:derby:{db};create=true\n"
+    )
+
+
+def _read_back(spark, dest: str, table: str):
+    if not dest.startswith("jdbc:"):
+        return spark.read.parquet(f"{dest}/{table}")
+    return spark.read.format("jdbc").option("url", dest).option("dbtable", table).load()
+
+
+def _jobs_in_group(spark, group: str, run):
+    """Run ``run()`` under job group ``group``; return its result and the
+    number of Spark jobs the group ran."""
     sc = spark.sparkContext
-    nodes, edges = collect_example(spark)
-    sc.setJobGroup("etl-flatten", "flatten jobs")
+    sc.setJobGroup(group, group)
     try:
-        flatten_graph(nodes, edges, example_catalog())
+        result = run()
     finally:
         sc._jsc.clearJobGroup()
+    # the status tracker is fed from the listener bus; let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_runs_one_job_per_table(spark):
+    """Under the caller's job group, a Parquet export runs exactly one
+    write job per kind table plus ONE write for every link table (a
+    partitioned write, row counts from its footers) — no link-pair
+    discovery and no per-table recount: 7 jobs for the example graph."""
+    import shutil
 
     out = os.path.join(_TMP, "one_job_per_table")
     shutil.rmtree(out, ignore_errors=True)
-    cfg = parse_config(
-        f"sources:\n  example:\ndestinations:\n  file:\n    path: {out}\n"
+    cfg = _parquet_cfg(out)
+    counts, jobs = _jobs_in_group(
+        spark, "etl-jobs", lambda: collect(spark, cfg, destination_from_config(cfg))
     )
-    sc.setJobGroup("etl-jobs", "parquet export")
-    try:
-        counts = collect(spark, cfg, destination_from_config(cfg))
-    finally:
-        sc._jsc.clearJobGroup()
     assert counts == GOLDEN_COUNTS
     # each source's FAIR pool stays on its own pool thread
-    assert sc.getLocalProperty("spark.scheduler.pool") is None
-    # the status tracker is fed from the listener bus; let it catch up
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    flatten_jobs = len(tracker.getJobIdsForGroup("etl-flatten"))
-    assert flatten_jobs == 2  # AQE: the distinct's shuffle-map and result jobs
-    etl_jobs = len(tracker.getJobIdsForGroup("etl-jobs"))
-    assert etl_jobs == len(GOLDEN_COUNTS) + flatten_jobs
+    assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
+    assert len(example_catalog().kinds()) == 6
+    assert jobs == 6 + 1
     for table, expected in GOLDEN_COUNTS.items():
         assert spark.read.parquet(f"{out}/{table}").count() == expected, table
+
+
+def test_jdbc_load_runs_one_job_per_table_plus_discovery(spark):
+    """A JDBC export stages each of the 13 tables in one job, and the
+    link-pair discovery (a ``distinct().collect()``: two jobs under AQE)
+    runs on a side thread that keeps the caller's job group."""
+    import shutil
+
+    db = os.path.join(_TMP, "jdbc_job_count")
+    shutil.rmtree(db, ignore_errors=True)
+    cfg = _derby_cfg(db)
+    nodes, edges = collect_example(spark)
+    _, discovery_jobs = _jobs_in_group(
+        spark, "etl-discovery", lambda: link_tables(edges)
+    )
+    assert discovery_jobs == 2
+    counts, jobs = _jobs_in_group(
+        spark, "etl-jdbc", lambda: collect(spark, cfg, destination_from_config(cfg))
+    )
+    assert counts == GOLDEN_COUNTS
+    assert jobs == 13 + 2
+
+
+def test_read_catalog_runs_no_spark_job(spark):
+    """kinds.json is read on the driver through the Hadoop FileSystem
+    API (a ``file:`` URI here), not by a Spark job."""
+    from cloud2sql_spark.etl.graph_source import export_graph, read_catalog
+
+    export_dir = os.path.join(_TMP, "catalog_export")
+    nodes, edges = collect_example(spark)
+    export_graph(nodes, edges, example_catalog(), export_dir)
+    catalog, jobs = _jobs_in_group(
+        spark, "etl-catalog", lambda: read_catalog(spark, f"file://{export_dir}")
+    )
+    assert jobs == 0
+    assert catalog.kinds() == example_catalog().kinds()
+    for kind in catalog.kinds():
+        assert catalog.schema(kind) == example_catalog().schema(kind), kind
 
 
 def test_empty_kind_loads_empty_table(spark, monkeypatch):
@@ -638,6 +702,217 @@ def test_failing_table_blocks_jdbc_promote(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
+# Parquet link tables: one partitioned write, promoted per pair
+# ---------------------------------------------------------------------------
+
+
+_LINK = "link_example_account_example_region"
+
+
+@pytest.mark.parametrize("sink", ["parquet", "derby"])
+@pytest.mark.parametrize(
+    "bad_pair",
+    [(None, "example_region"), ("example_account", "")],
+    ids=["null", "empty"],
+)
+def test_null_or_empty_edge_kind_raises_before_link_promote(
+    spark, monkeypatch, sink, bad_pair
+):
+    """An edge whose kind is NULL or empty names no link table: the export
+    raises a ValueError naming the pair, before any link table is promoted
+    (Parquet) or the swap runs (Derby). The failing run also adds an edge
+    to a valid pair, so a promoted link would read back a different
+    count."""
+    import shutil
+
+    from cloud2sql_spark.etl import pipeline
+
+    root = os.path.join(_TMP, f"bad_kind_{sink}_{bad_pair[0] is None}")
+    shutil.rmtree(root, ignore_errors=True)
+    if sink == "parquet":
+        cfg, dest = _parquet_cfg(root), root
+    else:
+        cfg, dest = _derby_cfg(root), f"jdbc:derby:{root}"
+    assert collect(spark, cfg, destination_from_config(cfg)) == GOLDEN_COUNTS
+
+    bad_edges = [
+        ("acc1", "reg2", "example_account", "example_region"),
+        ("x1", "reg1", *bad_pair),
+    ]
+    monkeypatch.setitem(pipeline.SOURCES, "example", _edges_source(bad_edges))
+    with pytest.raises(ValueError, match="NULL or empty") as err:
+        collect(spark, cfg, destination_from_config(cfg))
+    named = [k for k in bad_pair if k]
+    assert all(repr(k) in str(err.value) for k in named), err.value
+    for table, expected in GOLDEN_COUNTS.items():
+        if sink == "derby" or table.startswith("link_"):
+            assert _read_back(spark, dest, table).count() == expected, table
+    if sink == "parquet":
+        assert not [n for n in os.listdir(root) if n.startswith("link__")]
+
+
+# kind names whose partition directories Spark writes %XX-escaped
+_ODD_KINDS = ["my kind", "x=y", "50%", "a:b", "#h", "größe-ü"]
+
+
+def test_link_kind_names_round_trip(spark, monkeypatch):
+    """Kinds with a space, ``=``, ``%``, ``:``, ``#`` and non-ASCII
+    characters: the Parquet link tables, named from the unescaped
+    partition directories, get exactly the names ``link_tables`` gives,
+    and each reads back with its own rows."""
+    import shutil
+
+    from cloud2sql_spark.etl import pipeline
+    from cloud2sql_spark.etl.example_source import EDGES_SCHEMA
+
+    pairs = list(zip(_ODD_KINDS, _ODD_KINDS[1:] + _ODD_KINDS[:1]))
+    extra = [
+        (f"{f}-{i}", f"{t}-{i}", f, t)
+        for n, (f, t) in enumerate(pairs, start=1)
+        for i in range(n)
+    ]
+    edges = spark.createDataFrame(extra, EDGES_SCHEMA)
+    expected = {
+        name: sorted((r["from_id"], r["to_id"]) for r in df.collect())
+        for name, df in link_tables(edges).items()
+    }
+    assert len(expected) == len(pairs)
+
+    out = os.path.join(_TMP, "odd_kind_names")
+    shutil.rmtree(out, ignore_errors=True)
+    monkeypatch.setitem(pipeline.SOURCES, "example", _edges_source(extra))
+    counts = collect(spark, _parquet_cfg(out), FileDestination(out))
+    assert {t: counts[t] for t in counts if t not in GOLDEN_COUNTS} == {
+        t: len(rows) for t, rows in expected.items()
+    }
+    for table, rows in expected.items():
+        back = spark.read.parquet(os.path.join(out, table))
+        assert back.columns == ["from_id", "to_id"], table
+        assert sorted((r["from_id"], r["to_id"]) for r in back.collect()) == rows
+
+
+def _link_versions(out: str) -> list[str]:
+    return os.listdir(os.path.join(out, "_links.versions"))
+
+
+def test_link_promote_failure_keeps_every_link_readable(spark, monkeypatch):
+    """A promote that fails on the second link leaves every link table
+    readable, each at its old or its new snapshot, and deletes no version
+    directory a live link resolves into. The next successful export
+    retires the old version: one ``_links`` version remains."""
+    import shutil
+
+    from cloud2sql_spark.etl import pipeline
+
+    out = os.path.join(_TMP, "link_promote_failure")
+    shutil.rmtree(out, ignore_errors=True)
+    assert collect(spark, _parquet_cfg(out), FileDestination(out)) == GOLDEN_COUNTS
+    assert len(_link_versions(out)) == 1
+
+    # every pair gets one more edge, so old and new snapshots differ
+    links = sorted(t for t in GOLDEN_COUNTS if t.startswith("link_"))
+    pairs = [t.removeprefix("link_").split("_example_") for t in links]
+    extra = [(f"x{i}", f"y{i}", f, f"example_{t}") for i, (f, t) in enumerate(pairs)]
+    monkeypatch.setitem(pipeline.SOURCES, "example", _edges_source(extra))
+    new_counts = {**GOLDEN_COUNTS, **{t: GOLDEN_COUNTS[t] + 1 for t in links}}
+
+    promote = sinks.promote_snapshot
+    promoted: list[str] = []
+
+    def fail_on_second_link(version_dir, target):
+        if os.path.basename(target).startswith("link_"):
+            promoted.append(target)
+            if len(promoted) == 2:
+                raise OSError("promote failed")
+        promote(version_dir, target)
+
+    monkeypatch.setattr(sinks, "promote_snapshot", fail_on_second_link)
+    with pytest.raises(OSError, match="promote failed"):
+        collect(spark, _parquet_cfg(out), FileDestination(out))
+    monkeypatch.setattr(sinks, "promote_snapshot", promote)
+
+    seen = set()
+    for table in links:
+        live = os.path.realpath(os.path.join(out, table))
+        assert os.path.isdir(live), table
+        n = spark.read.parquet(os.path.join(out, table)).count()
+        assert n in (GOLDEN_COUNTS[table], new_counts[table]), table
+        seen.add(n == new_counts[table])
+    assert seen == {True, False}  # the failure really was part-way
+    assert len(_link_versions(out)) == 2
+
+    assert collect(spark, _parquet_cfg(out), FileDestination(out)) == new_counts
+    assert len(_link_versions(out)) == 1
+    for table in links:
+        assert spark.read.parquet(os.path.join(out, table)).count() == new_counts[table]
+
+
+def test_link_snapshot_migrates_per_table_layout(spark):
+    """An output directory written by the per-table layout (each link at
+    ``link_<from>_<to>.versions/<uuid>``) is migrated: the link now
+    resolves into ``_links.versions`` and its old versions are gone."""
+    import shutil
+
+    out = os.path.join(_TMP, "link_layout_migration")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    stale = spark.range(50).selectExpr("CAST(id AS STRING) AS from_id", "'z' AS to_id")
+    sinks.write_parquet_snapshot(stale, os.path.join(out, _LINK))
+    assert os.path.isdir(os.path.join(out, _LINK + ".versions"))
+
+    assert collect(spark, _parquet_cfg(out), FileDestination(out)) == GOLDEN_COUNTS
+    assert not os.path.exists(os.path.join(out, _LINK + ".versions"))
+    live = os.path.realpath(os.path.join(out, _LINK))
+    assert live.startswith(os.path.realpath(os.path.join(out, "_links.versions")))
+    assert spark.read.parquet(os.path.join(out, _LINK)).count() == GOLDEN_COUNTS[_LINK]
+
+
+def test_link_footer_counts_match_link_tables(spark):
+    """Per-pair counts read from the Parquet footers of a write that puts
+    several files in each pair's directory equal the counts of the
+    ``link_tables`` frames."""
+    from cloud2sql_spark.etl.pipeline import _write_links
+
+    nodes, edges = collect_example(spark)
+    edges = edges.crossJoin(spark.range(40).withColumnRenamed("id", "k")).selectExpr(
+        "concat(from_id, '-', k) AS from_id", "to_id", "from_kind", "to_kind"
+    ).repartition(4)
+    root = os.path.join(_TMP, "link_footers", "_links.versions")
+    import shutil
+
+    shutil.rmtree(os.path.dirname(root), ignore_errors=True)
+    written = _write_links(edges, root)
+    expected = {name: df.count() for name, df in link_tables(edges).items()}
+    assert {name: rows for name, (_, rows) in written.items()} == expected
+    files = [
+        f
+        for leaf, _ in written.values()
+        for f in os.listdir(leaf)
+        if f.endswith(".parquet")
+    ]
+    assert len(files) > len(written)  # some pair directory holds several files
+
+
+def test_shared_pair_from_two_sources_keeps_later_source(spark, monkeypatch):
+    """Two sources that emit the same pairs: each link table holds the
+    later source's edges (as each kind table holds the later source's
+    nodes), not the union of both."""
+    import shutil
+
+    from cloud2sql_spark.etl import pipeline
+
+    monkeypatch.setitem(pipeline.SOURCES, "twin", pipeline.SOURCES["example"])
+    out = os.path.join(_TMP, "two_sources_parquet")
+    shutil.rmtree(out, ignore_errors=True)
+    cfg = parse_config(
+        f"sources:\n  example:\n  twin:\ndestinations:\n  file:\n    path: {out}\n"
+    )
+    assert collect(spark, cfg, destination_from_config(cfg)) == GOLDEN_COUNTS
+    for table, expected in GOLDEN_COUNTS.items():
+        assert spark.read.parquet(f"{out}/{table}").count() == expected, table
+
+
+# ---------------------------------------------------------------------------
 # A17: progress/feedback channel (reference collect.py:165-189)
 # ---------------------------------------------------------------------------
 
@@ -662,7 +937,7 @@ def test_progress_messages_from_collect(spark):
     assert counts == GOLDEN_COUNTS
     lines = buf.getvalue().splitlines()
     assert "[example] collecting" in lines
-    assert "[example] collected (13 tables)" in lines
+    assert "[example] collected (6 kinds)" in lines
     assert any(l.startswith("[load] wrote example_instance") for l in lines)
     assert f"[load] {len(GOLDEN_COUNTS)}/{len(GOLDEN_COUNTS)} done" in lines
 
