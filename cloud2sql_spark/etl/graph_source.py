@@ -14,15 +14,27 @@ hdfs://) holding
 - ``kinds.json`` — the kind catalog ``{"kinds": {name: {prop: type}}}``
   with reference model type names (etl/model.py).
 
-Scale notes: nodes/edges are read as plain text and the fields extracted
-with ``get_json_object`` (JVM-side JSON path) — a single scan with NO
-schema-inference pre-pass over what may be terabytes of export;
-``get_json_object('$.payload')`` returns the raw JSON text for an object
-and the decoded string for a string payload, so both shapes land in the
-same STRING column that the flatten step parses with the kind's
-StructType. kinds.json is read on the driver through Hadoop's FileSystem
-API (works on any filesystem, runs no Spark job) — bounded by the number
-of kinds, not data.
+Reader: each directory is one scan of Spark's JSON data source with a
+fixed envelope schema that declares every field as STRING — no
+schema-inference pre-pass over what may be terabytes of export, and each
+line is parsed once. A STRING field takes an object or array value as
+its raw JSON text and a string value decoded, so both payload shapes land
+in the same STRING column that the flatten step parses with the kind's
+StructType; numbers and booleans arrive as their JSON text. Filters on
+envelope fields reach the parser (``PushedFilters: [IsNotNull(kind),
+EqualTo(kind,<kind>)]`` for a kind table, ``from_kind``/``to_kind`` for a
+per-pair link table), so a line of another kind is dropped as soon as its
+``kind`` field is read.
+
+Line policy (``mode=DROPMALFORMED``): a blank, garbage or truncated line
+yields no row — a truncated line never loads as a half-filled node. A
+duplicated key keeps its last value (as Python's ``json.loads`` does);
+keys match case-sensitively; a line holding a top-level array of objects
+yields one row per element.
+
+kinds.json is read on the driver through Hadoop's FileSystem API (works
+on any filesystem, runs no Spark job) — bounded by the number of kinds,
+not data.
 """
 
 from __future__ import annotations
@@ -31,7 +43,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from cloud2sql_spark.etl.model import Kind, KindCatalog
 
@@ -39,20 +51,15 @@ _NODE_FIELDS = ("node_id", "kind", "payload", "cloud", "account", "region")
 _EDGE_FIELDS = ("from_id", "to_id", "from_kind", "to_kind")
 
 
+def _read_lines(spark: SparkSession, path: str, fields: tuple[str, ...]) -> DataFrame:
+    envelope = StructType([StructField(f, StringType()) for f in fields])
+    return spark.read.schema(envelope).option("mode", "DROPMALFORMED").json(path)
+
+
 def read_graph(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Load the nodes and edges DataFrames from an exported graph."""
-    nodes = spark.read.text(os.path.join(path, "nodes")).select(
-        *[
-            F.get_json_object("value", f"$.{f}").alias(f)
-            for f in _NODE_FIELDS
-        ]
-    )
-    edges = spark.read.text(os.path.join(path, "edges")).select(
-        *[
-            F.get_json_object("value", f"$.{f}").alias(f)
-            for f in _EDGE_FIELDS
-        ]
-    )
+    nodes = _read_lines(spark, os.path.join(path, "nodes"), _NODE_FIELDS)
+    edges = _read_lines(spark, os.path.join(path, "edges"), _EDGE_FIELDS)
     return nodes, edges
 
 

@@ -1893,8 +1893,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both block sets — three start-up jobs collapsed to one (r15;
     # interleaved A/B 4.39 -> 3.53s on top of the lazy per-round
     # checkpoint, trace identical).
+    # A reliable checkpoint is written only for the first marked RDD a
+    # job's lineage walk meets: that count() would write alive's and
+    # never und_v's, so every round would recompute und_v from the
+    # edges. Under the reliable flag und_v is checkpointed eagerly.
+    reliable = flag_enabled("SPARK_GRAFT_RELIABLE_CHECKPOINT")
     und_v = und.repartition(p, "v").transform(
-        lambda d: truncate_lineage(d, eager=False)
+        lambda d: truncate_lineage(d, reliable=reliable, eager=reliable)
     )
     alive = (
         und_v.select("u").repartition(p, "u").distinct()

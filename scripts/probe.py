@@ -6,11 +6,14 @@ to contracts that only hold for a quirk of that corpus. Each axis
 re-rolls one such quirk:
 
 - ``split``: every table value-identical in row order, but written with
-  many small parquet row groups, and the vanilla session told (through
+  several parquet row groups (at least MIN_ROW_GROUPS, at most
+  ROW_GROUP_SIZE rows each), and the vanilla session told (through
   ``PYSPARK_SUBMIT_ARGS``, before the JVM starts) to read each file as
-  many input partitions. Catches order-dependence across input splits:
-  an unordered first()/collect_list(), a window ORDER that is not total
-  over duplicate keys, a float fold sensitive to combine order.
+  many input partitions, so every table of 100 rows or more reaches
+  Spark as several non-empty splits. Catches order-dependence across
+  input splits: an unordered first()/collect_list(), a window ORDER that
+  is not total over duplicate keys, a float fold sensitive to combine
+  order.
 - ``perturb``: structure-preserving value shifts (ids offset, money
   scaled by an odd integer so it stays exact to 2 decimals, timestamps
   shifted, embeddings negated, text prefixed). Catches keys that depend
@@ -48,9 +51,11 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# DuckDB clamps smaller ROW_GROUP_SIZE requests up to ~2048 rows; at
-# sf0.01 that is ~30 row groups for lineitem, 3 at sf0.001.
+# Split-axis row groups: a large table keeps groups of ROW_GROUP_SIZE
+# rows (sf0.01 lineitem: 30); a smaller one is cut into MIN_ROW_GROUPS.
+# pyarrow writes them, since DuckDB writes no row group under 2048 rows.
 ROW_GROUP_SIZE = 2048
+MIN_ROW_GROUPS = 4
 # Appended before the caller's PYSPARK_SUBMIT_ARGS, so a caller conf
 # wins on conflict (the last --conf occurrence takes precedence).
 SPLIT_CONFS = (
@@ -234,19 +239,26 @@ def _table_sql(src: str, name: str, chain: tuple[str, ...]) -> str | None:
     return sql if touched else None
 
 
+def row_group_size(rows: int) -> int:
+    """Rows per split-axis row group: at least MIN_ROW_GROUPS groups for
+    any table of MIN_ROW_GROUPS rows or more."""
+    return min(ROW_GROUP_SIZE, max(1, -(-rows // MIN_ROW_GROUPS)))
+
+
 def write_corpus(src: str, out: str, chain: tuple[str, ...]) -> dict[str, int]:
     """Write ``src``'s tables to ``out`` rewritten by ``chain``: one
-    DuckDB COPY per changed table (row order kept), a byte copy for the
-    rest. Returns the NULL count of each NULLed column and exits if one
-    is 0, since such a run would silently repeat the plain gate."""
+    DuckDB query per changed table (row order kept) written by pyarrow,
+    a byte copy for the rest. Returns the NULL count of each NULLed
+    column and exits if one is 0, since such a run would silently repeat
+    the plain gate."""
     import duckdb
+    import pyarrow.parquet as pq
 
     _guard_out_dir(src, out)
     _remove_out(out)
     os.makedirs(out)
     with open(os.path.join(out, MARKER), "w") as f:
         f.write("created by scripts/probe.py; safe to delete\n")
-    row_groups = f", ROW_GROUP_SIZE {ROW_GROUP_SIZE}" if "split" in chain else ""
     nulled = {}
     with duckdb.connect() as con:
         for path in sorted(glob.glob(os.path.join(src, "*.parquet"))):
@@ -255,9 +267,13 @@ def write_corpus(src: str, out: str, chain: tuple[str, ...]) -> dict[str, int]:
             if sql is None:
                 shutil.copyfile(path, os.path.join(out, f"{name}.parquet"))
             else:
-                con.execute(
-                    f"COPY ({sql}) TO '{out}/{name}.parquet' "
-                    f"(FORMAT PARQUET{row_groups})"
+                table = con.execute(sql).arrow()
+                pq.write_table(
+                    table,
+                    os.path.join(out, f"{name}.parquet"),
+                    row_group_size=(
+                        row_group_size(table.num_rows) if "split" in chain else None
+                    ),
                 )
         for column in (step[5:] for step in chain if step.startswith("null:")):
             table, col = column.split(".")

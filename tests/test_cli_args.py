@@ -242,3 +242,48 @@ def test_stream_state_probe_rejects_unknown_options():
     assert "unrecognized arguments" in r.stderr
     # the bad option fails BEFORE any fixture generation or Spark work
     assert "stream state probe:" not in r.stdout
+
+
+def test_verify_contract_checks_flagship_on_sf_dir_and_gates_entry(
+    spark, sf_dir, tmp_path, capsys
+):
+    """The full sweep checks the flagship ``pricing_summary`` on the
+    corpus under test, and calls a stubbed ``entry()`` only when the
+    directory written into its code exists (a skip line otherwise)."""
+    import importlib.util
+    import shutil
+
+    spec = importlib.util.spec_from_file_location(
+        "verify_contract", os.path.join(_REPO, "scripts", "verify_contract.py")
+    )
+    vc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(vc)
+    entry_dir = str(tmp_path / "entry_sf")
+    stub = tmp_path / "stub_entry.py"
+    stub.write_text(
+        "from cloud2sql_spark.queries.aggregates import pricing_summary\n"
+        "calls = []\n"
+        "def entry(spark):\n"
+        "    calls.append(1)\n"
+        f"    return pricing_summary(spark, {entry_dir!r})\n"
+    )
+    spec = importlib.util.spec_from_file_location("stub_entry", stub)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert vc._entry_dirs(mod.entry) == [entry_dir]
+    from cloud2sql_spark.queries.aggregates import pricing_summary
+
+    rows = pricing_summary(spark, sf_dir).count()
+
+    vc._check_entry(mod, spark, sf_dir)
+    out = capsys.readouterr().out
+    assert f"flagship rows: {rows} " in out
+    assert f"entry: skipped, {entry_dir} is absent" in out
+    assert mod.calls == []
+
+    os.makedirs(entry_dir)
+    shutil.copy(os.path.join(sf_dir, "lineitem.parquet"), entry_dir)
+    vc._check_entry(mod, spark, sf_dir)
+    out = capsys.readouterr().out
+    assert f"flagship rows: {rows} " in out and f"entry rows: {rows} " in out
+    assert mod.calls == [1]

@@ -359,28 +359,125 @@ def test_remote_graph_roundtrip_golden(spark):
     assert {r["id"] for r in inst.collect()} == {"inst1", "inst2"}
 
 
-def test_remote_graph_nested_payload_shape(spark):
-    """The reader accepts payload as a nested JSON object too (the shape a
-    foreign exporter would naturally produce), not only as an encoded
-    string."""
+_WIRE_NODE_LINES = (
+    '{"node_id": "n1", "kind": "k", "payload": {"id": "n1", "name": "x"},'
+    ' "cloud": "c", "account": "a", "region": "r"}',
+    '{"node_id": "n2", "kind": "k", "payload": "{\\"id\\": \\"n2\\"}",'
+    ' "cloud": "c", "account": "a", "region": "r"}',
+    "",
+    "garbage line",
+    '{"node_id": "n3", "kind": "k", "payload": {"id": "n3"',
+    '{"node_id": "n4", "kind": "k", "kind": "k2", "payload": {"id": "n4"}}',
+    '{"node_id": 5, "kind": "k", "payload": {"n": 3},'
+    ' "cloud": true, "account": 1.5, "region": null}',
+    '{"node_id": "n6", "Kind": "k", "payload": {"id": "n6"}}',
+    '[{"node_id": "n7", "kind": "k"}, {"node_id": "n8", "kind": "k2"}]',
+)
+_WIRE_EDGE_LINES = (
+    '{"from_id": "n1", "to_id": "n2", "from_kind": "k", "to_kind": "k2"}',
+    "",
+    "garbage line",
+    '{"from_id": "n1", "to_id": "n3", "from_kind": "k"',
+    '{"from_id": 1, "to_id": true, "from_kind": "k", "to_kind": "k", "to_kind": "k3"}',
+    '{"from_id": "n1", "To_id": "n2", "from_kind": "k", "to_kind": "k"}',
+    '[{"from_id": "n7", "to_id": "n8", "from_kind": "k", "to_kind": "k2"}]',
+)
+
+
+def test_remote_graph_wire_format_contract(spark):
+    """The exact rows ``read_graph`` yields for every line shape: both
+    payload shapes load; blank, garbage and truncated lines yield no row,
+    also under a kind filter; a duplicated key keeps its last value;
+    numbers and booleans arrive as their JSON text; keys match
+    case-sensitively; a top-level array of objects yields one row per
+    element."""
+    import json as _json
+    import shutil
+
     from cloud2sql_spark.etl.graph_source import read_graph
 
-    path = os.path.join(_TMP, "graph_nested")
-    os.makedirs(os.path.join(path, "nodes"), exist_ok=True)
-    os.makedirs(os.path.join(path, "edges"), exist_ok=True)
-    with open(os.path.join(path, "nodes", "part-0.json"), "w") as fh:
-        fh.write(
-            '{"node_id": "n1", "kind": "k", "payload": {"id": "n1", "name": "x"},'
-            ' "cloud": "c", "account": "a", "region": "r"}\n'
-        )
-    with open(os.path.join(path, "edges", "part-0.json"), "w") as fh:
-        fh.write('{"from_id": "n1", "to_id": "n2", "from_kind": "k", "to_kind": "k2"}\n')
+    path = os.path.join(_TMP, "graph_wire_contract")
+    shutil.rmtree(path, ignore_errors=True)
+    for sub, lines in (("nodes", _WIRE_NODE_LINES), ("edges", _WIRE_EDGE_LINES)):
+        os.makedirs(os.path.join(path, sub))
+        with open(os.path.join(path, sub, "part-0.json"), "w") as fh:
+            fh.write("\n".join(lines) + "\n")
     nodes, edges = read_graph(spark, path)
-    row = nodes.collect()[0]
-    import json as _json
 
-    assert _json.loads(row["payload"]) == {"id": "n1", "name": "x"}
-    assert edges.collect()[0]["to_kind"] == "k2"
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.collect()), key=lambda t: tuple(v or "" for v in t)
+        )
+
+    got = rows(nodes)
+    payloads = {r[0]: r[2] for r in got}
+    assert _json.loads(payloads["n1"]) == {"id": "n1", "name": "x"}
+    assert _json.loads(payloads["n2"]) == {"id": "n2"}
+    assert [r[:2] + r[3:] for r in got] == [
+        ("5", "k", "true", "1.5", None),
+        ("n1", "k", "c", "a", "r"),
+        ("n2", "k", "c", "a", "r"),
+        ("n4", "k2", None, None, None),
+        ("n6", None, None, None, None),
+        ("n7", "k", None, None, None),
+        ("n8", "k2", None, None, None),
+    ]
+    assert _json.loads(payloads["5"]) == {"n": 3}
+    assert payloads["n7"] is None and payloads["n8"] is None
+    assert nodes.count() == 7
+    assert sorted(
+        r["node_id"] for r in nodes.filter(F.col("kind") == "k").collect()
+    ) == ["5", "n1", "n2", "n7"]
+    assert nodes.filter(F.col("kind") == "k").count() == 4
+
+    assert rows(edges) == [
+        ("1", "true", "k", "k3"),
+        ("n1", None, "k", "k"),
+        ("n1", "n2", "k", "k2"),
+        ("n7", "n8", "k", "k2"),
+    ]
+    assert edges.count() == 4
+
+
+def test_kind_table_plans_push_kind_into_json_scan(spark):
+    """Every kind table scans the node lines once with Spark's JSON
+    reader and pushes its kind filter into that scan; no per-field
+    ``get_json_object`` re-parse is left in the plan."""
+    from cloud2sql_spark.etl.flatten import flatten_nodes
+    from cloud2sql_spark.etl.graph_source import export_graph, read_graph
+
+    export_dir = os.path.join(_TMP, "plan_export")
+    nodes, edges = collect_example(spark)
+    export_graph(nodes, edges, example_catalog(), export_dir)
+    nodes, _ = read_graph(spark, export_dir)
+    tables = flatten_nodes(nodes, example_catalog())
+    assert sorted(tables) == example_catalog().kinds()
+    for kind, df in tables.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan json" in plan, plan
+        assert f"EqualTo(kind,{kind})" in plan, plan
+        assert "get_json_object" not in plan, plan
+
+
+def test_link_table_plans_push_kind_pair_into_json_scan(spark):
+    """Every per-pair link table (the JDBC and CSV destinations) pushes
+    both of its kind columns into the JSON scan of the edge lines."""
+    import re
+
+    from cloud2sql_spark.etl.graph_source import export_graph, read_graph
+
+    export_dir = os.path.join(_TMP, "plan_export")
+    nodes, edges = collect_example(spark)
+    export_graph(nodes, edges, example_catalog(), export_dir)
+    _, edges = read_graph(spark, export_dir)
+    links = link_tables(edges)
+    assert sorted(links) == sorted(t for t in GOLDEN_COUNTS if t.startswith("link_"))
+    for name, df in links.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan json" in plan, plan
+        pushed = re.search(r"PushedFilters: \[([^\]]*)", plan).group(1)
+        assert "EqualTo(from_kind," in pushed and "EqualTo(to_kind," in pushed, plan
+        assert "get_json_object" not in plan, plan
 
 
 def test_remote_graph_requires_path():

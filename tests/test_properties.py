@@ -548,6 +548,37 @@ def test_reliable_checkpoint_dir_env_honored_after_default(spark, monkeypatch, t
     assert any(files for _, _, files in os.walk(ckdir)), "no checkpoint data"
 
 
+def test_kcore_reliable_checkpoint_finalizes_edges(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """Under SPARK_GRAFT_RELIABLE_CHECKPOINT=1, graph_kcore_peel's
+    undirected-edge frame (the first truncation point) is really written
+    as a reliable checkpoint — a lazy one would stay marked but unwritten,
+    since the start-up count() writes only the alive frame — and the
+    trace rows equal the default (local checkpoint) run's."""
+    from cloud2sql_spark.queries import analytics
+
+    def checkpointed(df) -> bool:
+        rdd = df._jdf.queryExecution().logical().rdd()
+        return rdd.isCheckpointed() and rdd.getCheckpointFile().isDefined()
+
+    base = analytics.graph_kcore_peel(spark, sf_dir).collect()
+    made = []
+    real = analytics.truncate_lineage
+
+    def recording(df, *args, **kwargs):
+        made.append(real(df, *args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(analytics, "truncate_lineage", recording)
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    assert analytics.graph_kcore_peel(spark, sf_dir).collect() == base
+    assert len(made) >= 3  # und_v, alive, then one per round
+    assert checkpointed(made[0]), "und_v's reliable checkpoint never finalized"
+    assert checkpointed(made[1])
+
+
 def test_cleanup_default_checkpoint_dirs(monkeypatch, tmp_path):
     """The sweep removes only the tempdir-default dirs THIS module
     INVENTED (_DEFAULT_DIRS) — an explicit app-chosen dir is untouched

@@ -58,18 +58,22 @@ def test_rewrite_fans_out_row_groups_and_preserves_rows(tmp_path):
     out = str(tmp_path / "multisplit")
     mod.write_corpus(_SF, out, ("split",))
 
-    # DuckDB clamps smaller requests up to its ~2048-row internal
-    # minimum, so sf0.001 lineitem (~6k rows) yields 3 groups — still a
-    # real multi-split fan-out
-    li = pq.ParquetFile(os.path.join(out, "lineitem.parquet"))
-    assert li.num_row_groups >= 2, li.num_row_groups
+    # every table of 100 rows or more is several row groups, small ones
+    # (sf0.001 customer: 150 rows) included, not only lineitem
+    from cloud2sql_spark.catalog import TABLES
+
+    for name in TABLES:
+        meta = pq.ParquetFile(os.path.join(out, f"{name}.parquet")).metadata
+        if meta.num_rows >= 100:
+            assert meta.num_row_groups >= 2, (name, meta.num_row_groups)
+            assert max(
+                meta.row_group(i).num_rows for i in range(meta.num_row_groups)
+            ) <= mod.ROW_GROUP_SIZE, name
 
     # every catalog table rewritten value-identical IN ROW ORDER: the
     # oracle's stream is unchanged. Full column-wise compare — a
     # prefix-only check would miss a parallel-scan reorder confined to
     # later row groups, the plausible failure mode.
-    from cloud2sql_spark.catalog import TABLES
-
     for name in TABLES:
         a = pq.read_table(os.path.join(out, f"{name}.parquet"))
         b = pq.read_table(os.path.join(_SF, f"{name}.parquet"))
@@ -78,6 +82,32 @@ def test_rewrite_fans_out_row_groups_and_preserves_rows(tmp_path):
 
     # probe-created dirs carry the rmtree-safety marker
     assert os.path.exists(os.path.join(out, mod.MARKER))
+
+
+def test_split_corpus_reaches_spark_as_several_splits(spark, tmp_path):
+    """Under the split confs, every table of 100 rows or more is planned
+    as two or more input partitions, and its rows land in two or more of
+    them: a single-row-group file would plan many splits but fill one."""
+    from pyspark.sql import functions as F
+
+    mod = _load_module()
+    out = str(tmp_path / "multisplit")
+    mod.write_corpus(_SF, out, ("split",))
+    confs = dict(c.split("=") for c in mod.SPLIT_CONFS)
+    before = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        for fn in sorted(f for f in os.listdir(out) if f.endswith(".parquet")):
+            df = spark.read.parquet(os.path.join(out, fn))
+            if df.count() < 100:
+                continue
+            assert df.rdd.getNumPartitions() >= 2, fn
+            filled = df.groupBy(F.spark_partition_id()).count().count()
+            assert filled >= 2, (fn, filled)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_rewrite_refuses_to_delete_source_or_foreign_dirs(tmp_path, monkeypatch):
