@@ -1,10 +1,11 @@
 """Lineage truncation for iterative (Pregel-style) DataFrame loops.
 
-Every superstep of an iterative op (BFS, k-core peel, PageRank, connected
-components) grows the logical plan by a few shuffles; without truncation
-the optimizer replans the whole nested union each round (observed as
-400 -> 600 -> 800 task stages and an eventual driver OOM). Two truncation
-modes, same semantics, different fault-tolerance:
+Every superstep of an iterative op (k-core peel, label propagation,
+PageRank, connected components) grows the logical plan by a few
+shuffles; without truncation the optimizer replans the whole nested
+union each round (observed as 400 -> 600 -> 800 task stages and an
+eventual driver OOM). Two truncation modes, same semantics, different
+fault-tolerance:
 
 - ``localCheckpoint`` (default): blocks are persisted on the executors and
   lineage is DROPPED. Fastest — no distributed-FS round trip — but NOT

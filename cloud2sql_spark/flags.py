@@ -75,7 +75,6 @@ FLAG_MATRIX: dict[str, dict] = {
     "SPARK_GRAFT_RELIABLE_CHECKPOINT": {
         "check": "exact",
         "keys": [
-            "graph_bfs_levels",
             "graph_kcore_peel",
             "graph_label_propagation",
             "dedup_cluster_cc",

@@ -32,6 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 # a second sf_dir before the least recently used entry goes.
 _MEMO_MAX = 16
 _MEMO: dict = {}
+# Hits, misses and LRU evictions of session_memo since the last reset().
+# Observability only: no code path reads them.
+_STATS = {"hits": 0, "misses": 0, "evictions": 0}
 
 
 def _unpersist(df: DataFrame) -> None:
@@ -53,13 +56,21 @@ def session_memo(
     store can never overrun the bound."""
     full = (spark.sparkContext.applicationId, *key)
     if full in _MEMO:
+        _STATS["hits"] += 1
         _MEMO[full] = _MEMO.pop(full)
         return _MEMO[full]
+    _STATS["misses"] += 1
     out = build().persist()
     while len(_MEMO) >= _MEMO_MAX:
         _unpersist(_MEMO.pop(next(iter(_MEMO))))
+        _STATS["evictions"] += 1
     _MEMO[full] = out
     return out
+
+
+def stats() -> dict[str, int]:
+    """session_memo's hit, miss and eviction counts since the last reset()."""
+    return dict(_STATS)
 
 
 # Per-call intermediate persists (an op's tok/prefix/posting frames) are
@@ -102,8 +113,10 @@ def track(df: DataFrame) -> DataFrame:
 
 
 def reset() -> None:
-    """Unpersist and drop every memo entry and every tracked frame."""
+    """Unpersist and drop every memo entry and every tracked frame, and
+    zero the counters."""
     for df in (*_MEMO.values(), *_EPHEMERAL_PERSISTS):
         _unpersist(df)
     _MEMO.clear()
     _EPHEMERAL_PERSISTS.clear()
+    _STATS.update(dict.fromkeys(_STATS, 0))

@@ -658,9 +658,15 @@ def events_daily_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The hop cap is part of the key's contract: the oracle's recursive walk
+# stops at hop < _BFS_MAX_HOP, and the Spark plan unrolls exactly that
+# many relaxations.
+_BFS_MAX_HOP = 6
+
+
 @register(
     "graph_bfs_levels",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE
     base AS (
       SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS p,
@@ -676,73 +682,73 @@ def events_daily_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION
       SELECT e.dst, w.hop + 1
       FROM walk w JOIN edges e ON e.src = w.node
-      WHERE w.hop < 6),
+      WHERE w.hop < {_BFS_MAX_HOP}),
     lev AS (SELECT node, min(hop) AS hop FROM walk GROUP BY node)
     SELECT hop, count(*) AS n_nodes FROM lev GROUP BY hop
     """,
 )
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breadth-first search over the sparse part--supplier bipartite graph
-    (edges = distinct (part, supplier) pairs shipped with l_quantity <= 1;
-    ~1.1k edges at sf0.01, so the frontier actually branches instead of
-    saturating in two hops). Pregel-in-DataFrame form: each round joins the
-    current frontier against the edge list on the node key, anti-joins the
-    visited set to keep FIRST arrivals only (that anti-join IS the min-hop
-    semantics), and unions into visited. Rounds are capped at 6 on both
-    engines (the oracle recursive CTE carries the same hop < 6 bound, and
-    its UNION-recursion dedups on (node, hop) so bipartite parity re-visits
-    stay bounded by nodes x hops, never path-enumeration). Each superstep
-    ends in a LAZY lineage truncation forced by the frontier count
-    (truncate_lineage — executor-local blocks by default, reliable
-    checkpoint() to a durable dir on a cluster via
-    SPARK_GRAFT_RELIABLE_CHECKPOINT=1): plain persist leaves the logical
-    plan growing by three shuffles per round (the optimizer replans the
-    whole nested union every superstep — observed as 400 -> 600 -> 800
-    task stages and an eventual driver OOM), while checkpointing truncates
-    lineage so every round is exactly one keyed equi-join + distinct +
-    anti-join, the same per-superstep shuffle Pregel does at cluster
-    scale. An empty frontier short-circuits the remaining rounds."""
+    """Breadth-first levels of the sparse part--supplier bipartite graph
+    (edges = (part, supplier) pairs shipped with l_quantity <= 1; ~1.1k
+    edges at sf0.01, so the frontier branches instead of saturating in
+    two hops), seeded at the smallest supplier and capped at
+    _BFS_MAX_HOP hops on both engines.
+
+    One lazy plan of fixed depth, no driver loop: a min-plus relaxation
+    unrolled _BFS_MAX_HOP times. ``step`` holds every edge in both
+    directions at weight 1 plus a weight-0 self-loop per endpoint, and
+    each relaxation is ``reached LEFT JOIN step ON node = src`` followed
+    by ``groupBy(node).min(hop + w)``. After k relaxations ``reached``
+    holds every node within k hops of the seed at its least hop: the
+    weight-1 arcs extend each path by one edge, the self-loops carry
+    every node already reached forward unchanged, and the min keeps the
+    first arrival -- the same node -> min(hop) the oracle's recursive
+    walk groups to. Duplicate edges only repeat candidate rows that the
+    min folds away, so the edge list needs no distinct().
+
+    NULL keys follow the oracle's string ids, where 'p' || NULL is NULL.
+    A NULL endpoint is a real node that an edge can reach (it is counted
+    once, as one NULL group) but that no edge leaves, since NULL = src
+    never matches. The left join keeps such a row, and the match flag
+    ``src IS NULL`` keeps its own node and adds 0 -- coalesce(dst, node)
+    would instead turn a matched arc INTO a NULL node back into its
+    source and lose the NULL node. The same row keeps the empty graph's
+    NULL seed, so no qualifying lineitem row gives [(0, 1)] like the
+    oracle, where an inner join would give no rows. The left join also
+    fixes the build side: a left outer join can only build on ``step``,
+    so under AQE the small edge list is broadcast once and reused by
+    every relaxation, and above the broadcast threshold every join is a
+    shuffle join. No broadcast hint, no action, no checkpoint: Spark
+    plans the whole search once."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") <= 1)
     # LONG node ids (part pk -> 2*pk, supplier sk -> 2*sk+1; the
     # _pagerank_edges discipline): the output is the per-hop COUNT
     # histogram, so node identity never leaves the operator and every
-    # per-superstep join/distinct/anti-join keys on an 8-byte long
-    # instead of a 'p{pk}'/'s{sk}' string (guide §2.3).
-    half = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("p"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("s"),
-    ).distinct()
-    edges = half.select(F.col("p").alias("src"), F.col("s").alias("dst")).unionByName(
-        half.select(F.col("s").alias("src"), F.col("p").alias("dst"))
-    )
-    edges = edges.transform(truncate_lineage)
-    seed = li.agg(
+    # join and group keys on an 8-byte long, not a 'p{pk}'/'s{sk}' string.
+    p = (F.col("l_partkey") * 2).cast("long")
+    s = (F.col("l_suppkey") * 2 + 1).cast("long")
+
+    def arc(src, dst, w):
+        return F.struct(src.alias("src"), dst.alias("dst"), F.lit(w).alias("w"))
+
+    step = li.select(
+        F.explode(F.array(arc(p, s, 1), arc(s, p, 1), arc(p, p, 0), arc(s, s, 0)))
+        .alias("a")
+    ).select("a.*")
+    reached = li.agg(
         (F.min("l_suppkey") * 2 + 1).cast("long").alias("node")
     ).withColumn("hop", F.lit(0))
-    visited = seed.transform(truncate_lineage)
-    frontier = visited
-    for hop in range(1, 7):
-        # Three per-hop jobs folded into one (r15, guide §2.6): the
-        # frontier checkpoint is LAZY and forced by count() — which
-        # covers every partition, so the blocks are fully materialized —
-        # replacing the eager checkpoint + isEmpty() pair; and visited
-        # is a plain union of (<= 7) already-checkpointed frontiers, so
-        # its plan stays shallow without a third materialization pass.
-        # Interleaved A/B: faster on all 4 trials (best 1.645 -> 1.608s),
-        # rows identical.
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .withColumn("hop", F.lit(hop))
-            .transform(lambda d: truncate_lineage(d, eager=False))
+    # the match flag, not coalesce(dst, node): a matched arc may lead TO a
+    # NULL node, and an unmatched row keeps its own node at +0
+    node = F.when(F.col("src").isNull(), F.col("node")).otherwise(F.col("dst"))
+    hop = F.col("hop") + F.coalesce("w", F.lit(0))
+    for _ in range(_BFS_MAX_HOP):
+        reached = (
+            reached.join(step, F.col("node") == F.col("src"), "left")
+            .groupBy(node.alias("node"))
+            .agg(F.min(hop).alias("hop"))
         )
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited.groupBy("hop").agg(F.count(F.lit(1)).alias("n_nodes"))
+    return reached.groupBy("hop").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
 @register(

@@ -41,6 +41,7 @@ def empty_memo(monkeypatch):
     other tests memoized in the shared session."""
     monkeypatch.setattr(memo, "_MEMO", {})
     monkeypatch.setattr(memo, "_EPHEMERAL_PERSISTS", [])
+    monkeypatch.setattr(memo, "_STATS", dict.fromkeys(memo._STATS, 0))
 
 
 def test_session_memo_bound_order_and_unpersist(empty_memo, monkeypatch):
@@ -76,6 +77,30 @@ def test_session_memo_bound_order_and_unpersist(empty_memo, monkeypatch):
     memo.reset()
     assert memo._MEMO == {}
     assert all(frames[k].unpersisted for k in "bde")
+
+
+def test_session_memo_counts_hits_misses_and_evictions(empty_memo, monkeypatch):
+    """stats() counts a miss per build, a hit per stored frame served and
+    an eviction per victim past _MEMO_MAX; reset() zeroes all three."""
+    monkeypatch.setattr(memo, "_MEMO_MAX", 2)
+
+    def get(k):
+        return memo.session_memo(_Spark(), ("fam", k), _Frame)
+
+    assert memo.stats() == {"hits": 0, "misses": 0, "evictions": 0}
+    get("a")
+    assert memo.stats() == {"hits": 0, "misses": 1, "evictions": 0}
+    get("a")
+    assert memo.stats() == {"hits": 1, "misses": 1, "evictions": 0}
+    get("b")  # fills the store: no eviction yet
+    get("c")  # evicts a
+    assert memo.stats() == {"hits": 1, "misses": 3, "evictions": 1}
+    get("a")  # a rebuild is a miss, and evicts b
+    assert memo.stats() == {"hits": 1, "misses": 4, "evictions": 2}
+    memo.stats()["hits"] = 99  # a copy: the caller cannot move the counts
+    assert memo.stats()["hits"] == 1
+    memo.reset()
+    assert memo.stats() == {"hits": 0, "misses": 0, "evictions": 0}
 
 
 def test_track_bounds_ephemeral_persists(empty_memo, caplog):

@@ -328,6 +328,24 @@ def test_round4_batch3_avoid_cartesian(key, spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def test_bfs_levels_is_one_lazy_plan(spark, sf_dir):
+    """graph_bfs_levels builds its frame without running a Spark job (a
+    driver loop of checkpointed supersteps ran 37) and its plan reads no
+    checkpoint: no Scan ExistingRDD."""
+    sc = spark.sparkContext
+    group = "test_plans-graph_bfs_levels-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = _QUERIES["graph_bfs_levels"](spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status tracker is fed from the listener bus; let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plan = _physical(df)
+    assert "Scan ExistingRDD" not in plan, plan
+
+
 def test_grouping_id_single_expand(spark, sf_dir):
     """ROLLUP compiles to one Expand + partial/final HashAggregate —
     not one scan per grouping set."""

@@ -8,6 +8,7 @@ arithmetic mirrored from the query implementations.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -256,43 +257,106 @@ def test_poisson_bootstrap_thresholds_match_cdf():
         assert format(int(cum * 16**6), "06x") == expect
 
 
+def _write_bfs_lineitem(spark, tmp_path, pairs):
+    """Write ``tmp_path/lineitem.parquet`` with one l_quantity-1 row per
+    (l_partkey, l_suppkey) pair, plus one row that never qualifies so the
+    table is never empty; returns the parquet directory."""
+    from datetime import datetime
+
+    rows = [(pk, sk, 1.0) for pk, sk in pairs] + [(5, 5, 7.0)]
+    df = spark.createDataFrame(
+        [
+            (i, pk, sk, 1, qty, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
+            for i, (pk, sk, qty) in enumerate(rows)
+        ],
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    )
+    path = tmp_path / "lineitem.parquet"
+    df.coalesce(1).write.mode("overwrite").parquet(str(path))
+    return path
+
+
+# (l_partkey, l_suppkey) pairs; pN = part N, sN = supplier N
+_BFS_CASES = {
+    # s0-p1-s1-p2-s2 chain, p3 off s0 (twice), island p9-s9
+    "chain": [(1, 0), (1, 1), (2, 1), (2, 2), (3, 0), (3, 0), (9, 9)],
+    # s0-p1-s1-...-p5-s5: 10 edges, so s3 at hop 6 is the last one counted
+    "path_past_cap": [(k, k - 1) for k in range(1, 6)]
+    + [(k, k) for k in range(1, 6)],
+    # no edge and a NULL seed: the oracle still counts the seed at hop 0
+    "no_qualifying_rows": [],
+    # s0 reaches p1 and the NULL part; s2 hangs off the NULL part only, so
+    # it is unreachable (NULL = src never matches)
+    "null_partkey": [(1, 0), (None, 0), (None, 2), (3, 2)],
+    # the NULL supplier is reached at hop 2 and leads nowhere
+    "null_suppkey": [(1, 0), (1, None), (2, None), (2, 3)],
+    # every supplier NULL: a NULL seed with edges that it cannot leave by
+    "all_suppkeys_null": [(1, None), (2, None)],
+    "duplicate_edge": [(1, 0), (1, 0), (1, 0), (1, 1), (2, 1)],
+    "island": [(1, 0), (9, 9), (9, 8), (7, 8)],
+}
+
+_BFS_CONFS = {
+    "default": {},
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+}
+
+
 def test_bfs_levels_chain_graph(spark, tmp_path):
     """graph_bfs_levels on a hand-built graph: a chain s0-p1-s1-p2-s2
     plus a branch p3 off s0, an unreachable island s9-p9, and a parallel
     edge (duplicate lineitem row) that must not double-count. Expected
     levels computed by hand; the hop-6 cap must also exclude nothing
     here (diameter 4)."""
-    from datetime import datetime
-
     from cloud2sql_spark.queries.analytics import graph_bfs_levels
 
-    edges = [
-        (1, 0), (1, 1), (2, 1), (2, 2),   # chain p1(s0,s1), p2(s1,s2)
-        (3, 0),                            # branch p3 off s0
-        (3, 0),                            # parallel duplicate edge
-        (9, 9),                            # island p9-s9
-    ]
-    rows = [
-        (i, pk, sk, 1, 1.0, 10.0, 0.0, 0.0, "N", "O",
-         datetime(2024, 1, 1))
-        for i, (pk, sk) in enumerate(edges)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
-        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
-        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
-        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "lineitem.parquet")
-    )
+    _write_bfs_lineitem(spark, tmp_path, _BFS_CASES["chain"])
     got = {
         r["hop"]: r["n_nodes"]
         for r in graph_bfs_levels(spark, str(tmp_path)).collect()
     }
     # seed s0 (hop 0); p1,p3 (1); s1 (2); p2 (3); s2 (4); island excluded
     assert got == {0: 1, 1: 2, 2: 1, 3: 1, 4: 1}
+
+
+@pytest.mark.parametrize("case", sorted(_BFS_CASES))
+def test_bfs_levels_match_oracle(spark, tmp_path, case):
+    """graph_bfs_levels equals the DuckDB oracle on hand-built graphs at
+    the edges of its contract: the hop cap, the empty graph, NULL keys
+    on either side, duplicate edges and islands. Each case runs under
+    the default session, with AQE off, and with broadcast joins off (the
+    shuffle-join plan used at scale); both confs are restored after."""
+    import duckdb
+
+    from cloud2sql_spark.queries.analytics import graph_bfs_levels
+    from cloud2sql_spark.registry import oracle_sql
+    from tests.oracle import compare
+
+    path = _write_bfs_lineitem(spark, tmp_path, _BFS_CASES[case])
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    keys = {k for confs in _BFS_CONFS.values() for k in confs}
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for name, confs in _BFS_CONFS.items():
+            for k, v in saved.items():
+                spark.conf.set(k, confs.get(k, v))
+            compare(
+                graph_bfs_levels(spark, str(tmp_path)),
+                con,
+                oracle_sql()["graph_bfs_levels"],
+                key=f"graph_bfs_levels[{case}, {name}]",
+            )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        con.close()
 
 
 def _write_events(spark, tmp_path, rows):
@@ -490,24 +554,24 @@ def test_reliable_checkpoint_path(spark, sf_dir, monkeypatch, tmp_path):
     checkpoint() to a durable dir instead of executor-local blocks) must
     produce the same rows as the default local path, and must actually
     write checkpoint data under SPARK_GRAFT_CHECKPOINT_DIR. Exercised
-    through a real iterative op (graph_bfs_levels) driven by the env
-    switch, plus directly on a DataFrame."""
+    through a real iterative op (graph_label_propagation) driven by the
+    env switch, plus directly on a DataFrame."""
     import os
 
     from cloud2sql_spark.checkpointing import truncate_lineage
-    from cloud2sql_spark.queries.analytics import graph_bfs_levels
+    from cloud2sql_spark.queries.analytics import graph_label_propagation
 
     base = {
-        (r["hop"], r["n_nodes"])
-        for r in graph_bfs_levels(spark, sf_dir).collect()
+        (r["label"], r["n_nodes"])
+        for r in graph_label_propagation(spark, sf_dir).collect()
     }
 
     ckdir = str(tmp_path / "reliable-ckpt")
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
     reliable = {
-        (r["hop"], r["n_nodes"])
-        for r in graph_bfs_levels(spark, sf_dir).collect()
+        (r["label"], r["n_nodes"])
+        for r in graph_label_propagation(spark, sf_dir).collect()
     }
     assert reliable == base
 
