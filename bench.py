@@ -311,10 +311,17 @@ def main(argv: list[str] | None = None) -> None:
     # best-of-3 per query: this box shows large exogenous load spikes
     # (round-3 measurements saw identical code vary 3-10x run to run on an
     # idle VM — host-level contention), and a single-shot measurement can
-    # catch one. Caches are cleared between trials so every timing is a
-    # cold plan execution, not a cache read.
+    # catch one. The session memo and Spark's cache are cleared between
+    # trials, so every timing re-executes its plan from parquet rather
+    # than reading persisted frames. Compiled codegen classes are NOT
+    # cleared: they persist across trials as in any long session, so
+    # trial 1 also pays Janino compiles that trials 2-3 reuse.
+    codegen_metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compile_hist = codegen_metrics.METRIC_COMPILATION_TIME()
+    codegen_compiles: list[int] = []
     per_query: dict[str, float] = {}
     for trial in range(3):
+        compiles_before = compile_hist.getCount()
         # Warm the shared shingle index and time it as its own line. Ten
         # dedup/text ops share this per-session persisted index (listed in
         # _doc_shingles' docstring; dedup_simhash is not one of them, its
@@ -378,6 +385,7 @@ def main(argv: list[str] | None = None) -> None:
             dt = round(time.time() - t0, 3)
             per_query[key] = min(per_query.get(key, float("inf")), dt)
         spark.catalog.clearCache()
+        codegen_compiles.append(compile_hist.getCount() - compiles_before)
 
     total = round(sum(per_query.values()), 3)
     r01_total = round(
@@ -410,6 +418,9 @@ def main(argv: list[str] | None = None) -> None:
         # a dropped op) is skipped above — surface it so a silent
         # skip can't masquerade as a faster subtotal
         "missing_keys": sorted(k for k in HEADLINE if k not in registry),
+        # Janino compiles per trial (Spark's CodegenMetrics counter); near
+        # 0 after trial 1 while the codegen cache holds the working set.
+        "codegen_compiles": codegen_compiles,
     }
     print(json.dumps(result))
     # Persist the full per-key recording in-repo (VERDICT r06 item 2): the

@@ -10,6 +10,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cloud2sql_spark import memo
 from cloud2sql_spark.catalog import TABLES
 from cloud2sql_spark.session import get_spark
 
@@ -21,6 +22,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     spark = get_spark("cloud2sql_spark-tests", cpus=8)
     yield spark
+
+
+@pytest.fixture
+def empty_memo(monkeypatch):
+    """A private memo store and ledger, so a test never touches the frames
+    other tests memoized in the shared session."""
+    monkeypatch.setattr(memo, "_MEMO", {})
+    monkeypatch.setattr(memo, "_EPHEMERAL_PERSISTS", [])
+    monkeypatch.setattr(memo, "_STATS", dict.fromkeys(memo._STATS, 0))
 
 
 @pytest.fixture(scope="session")

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import logging
 
-import pytest
-
 from cloud2sql_spark import memo
 
 
@@ -33,15 +31,6 @@ class _Spark:
 
     class sparkContext:
         applicationId = "app-test"
-
-
-@pytest.fixture
-def empty_memo(monkeypatch):
-    """A private store and ledger, so a test never touches the frames
-    other tests memoized in the shared session."""
-    monkeypatch.setattr(memo, "_MEMO", {})
-    monkeypatch.setattr(memo, "_EPHEMERAL_PERSISTS", [])
-    monkeypatch.setattr(memo, "_STATS", dict.fromkeys(memo._STATS, 0))
 
 
 def test_session_memo_bound_order_and_unpersist(empty_memo, monkeypatch):

@@ -2,8 +2,15 @@
 scale design leans on. The reference has no randomized testing (SURVEY.md
 §5.1); these pin the math that the differential oracle can only sample.
 
-No SparkSession here — everything tested is deterministic driver-side
-arithmetic mirrored from the query implementations.
+The hypothesis properties (simhash bands, s3 URLs, the curation-op
+invariants, the prefix-filter theorem, the exact-rounding templates) need no
+SparkSession: they check deterministic driver-side arithmetic mirrored
+from the query implementations. The tests that take the ``spark``
+fixture run real queries on small hand-built tables: the BFS oracle and
+chain cases, the reliable-checkpoint paths, the text-repetition and
+per-operator edge-case oracles (as-of ties, time travel, EWMA, PageRank,
+interval merge, streaks, label propagation, ...), and the Spark forms
+of the ``_MEAN_MILLI_6DP`` and ``ratio_round`` templates.
 """
 
 from __future__ import annotations
