@@ -3,8 +3,12 @@
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is timed end-to-end (plan + execute + collect). The headline
-metric is the sum over the headline set.
+Each query is timed end-to-end (plan + execute + noop write), best of
+three trials; ``run_trial`` is the one trial body, shared with
+scripts/scale_probe.py, and prints ``trial N: <line> <seconds>`` to
+stderr per timed line. The headline metric is the sum over the headline
+set. ``SPARK_GRAFT_BENCH_ONLY=k1,k2`` times only the named keys (plus the
+four shared dedup build lines) and is never persisted.
 
 An unfiltered sf0.1 run also overwrites bench_full_latest.json, appends
 the same record to bench_history.jsonl and prints the best-ever gate
@@ -254,22 +258,84 @@ R05_SET = R04_SET + _R05_ADDITIONS
 R06_SET = R05_SET + _R06_ADDITIONS
 HEADLINE = R06_SET
 
+WARM_DIR = "/root/testdata/sf0.001"
+
+
+def warm_up(spark, registry) -> None:
+    """Warm the JVM (codegen, shuffle machinery, parquet reader) at
+    sf0.001 so the first timed line doesn't pay one-time startup cost."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+    if os.path.isdir(WARM_DIR):
+        registry["agg_groupby"](spark, WARM_DIR).collect()
+
+
+def run_trial(
+    spark, registry, sf_dir: str, keys: list[str], trial: int
+) -> dict[str, float]:
+    """Time one trial at ``sf_dir`` and return seconds per timed line,
+    printing ``trial N: <line> <seconds>`` to stderr as each finishes.
+
+    The memo is reset first and Spark's cache cleared last, so every line
+    re-executes its plan from parquet. The shared shingle index and the
+    three memoized dedup indexes are timed as their own lines, ahead of
+    the keys: charged to whichever family key ran first, they made
+    per-key numbers trial-order dependent (r3's dedup_near_minhash
+    0.92→1.74s was pure attribution). Their arguments mirror the
+    consumers' call sites (threshold 0.5, default df_cap) so the memo
+    keys match. Each key writes to the noop sink, not count(): count()
+    lets Catalyst prune unreferenced columns (ADVICE r1), while noop
+    materializes every column and discards rows executor-side.
+    """
+    from cloud2sql_spark import memo
+    from cloud2sql_spark.queries.extensions import (
+        _capped_sr_meta,
+        _doc_shingles,
+        _exact_jaccard_pairs_shared,
+        _simhash_sig_frame,
+    )
+
+    def shingle_build() -> None:
+        _doc_shingles(spark, sf_dir, nonempty=True).count()
+        _doc_shingles(spark, sf_dir).count()
+
+    def write_noop(key: str) -> None:
+        registry[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    lines = [
+        ("shingle_build", shingle_build),
+        (
+            "dedup_build_jaccard_truth",
+            lambda: _exact_jaccard_pairs_shared(spark, sf_dir, 0.5).count(),
+        ),
+        ("dedup_build_simhash_sig", lambda: _simhash_sig_frame(spark, sf_dir).count()),
+        ("dedup_build_sr_meta", lambda: _capped_sr_meta(spark, sf_dir).count()),
+    ]
+    lines += [(k, lambda k=k: write_noop(k)) for k in keys if k in registry]
+
+    memo.reset()
+    times: dict[str, float] = {}
+    for line, action in lines:
+        spark.sparkContext.setJobDescription(line)
+        t0 = time.time()
+        action()
+        times[line] = round(time.time() - t0, 3)
+        print(f"trial {trial}: {line} {times[line]}", file=sys.stderr, flush=True)
+    spark.sparkContext.setJobDescription(None)
+    spark.catalog.clearCache()
+    return times
+
 
 def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     """Parse CLI args with zero side effects — importable by tests.
-
-    bench.py is configured entirely by env vars; it accepts NO
-    arguments. Before this parser existed ANY invocation — including
-    ``--help`` — launched the full ~7-minute sf0.1 run and rewrote
-    bench_full_latest.json / bench_history.jsonl (VERDICT r09 item 4).
-    Now ``--help`` prints usage and exits 0 with no Spark session and no
-    file writes, and any stray argument errors out immediately.
-    """
+    bench.py is configured by env vars and takes NO arguments: ``--help``
+    answers with no session and no file writes, and any stray argument
+    errors out before any work (VERDICT r09 item 4)."""
     parser = argparse.ArgumentParser(
         description=(
             "Time the headline query set at SPARK_GRAFT_SF_DIR (default "
             "/root/testdata/sf0.1, ~7 min best-of-3) and print ONE JSON "
-            "line; unfiltered sf0.1 runs also write "
+            "line; each trial's per-line seconds go to stderr as "
+            "'trial N: <line> <seconds>'. Unfiltered sf0.1 runs also write "
             "bench_full_latest.json, append bench_history.jsonl and "
             "print the best-ever gate line to stderr."
         ),
@@ -300,97 +366,25 @@ def main(argv: list[str] | None = None) -> None:
     headline = [k for k in HEADLINE if not only or k in only]
     spark = get_spark("cloud2sql_spark-bench")
     registry = queries()
+    warm_up(spark, registry)
 
-    # warm the JVM (codegen, shuffle machinery, parquet reader) at sf0.001
-    # so the first timed query doesn't pay one-time startup cost
-    warm_dir = "/root/testdata/sf0.001"
-    spark.range(1000).selectExpr("sum(id)").collect()
-    if os.path.isdir(warm_dir):
-        registry["agg_groupby"](spark, warm_dir).collect()
-
-    # best-of-3 per query: this box shows large exogenous load spikes
+    # best-of-3 per line: this box shows large exogenous load spikes
     # (round-3 measurements saw identical code vary 3-10x run to run on an
     # idle VM — host-level contention), and a single-shot measurement can
-    # catch one. The session memo and Spark's cache are cleared between
-    # trials, so every timing re-executes its plan from parquet rather
-    # than reading persisted frames. Compiled codegen classes are NOT
-    # cleared: they persist across trials as in any long session, so
-    # trial 1 also pays Janino compiles that trials 2-3 reuse.
+    # catch one. Compiled codegen classes are NOT cleared between trials:
+    # they persist as in any long session, so trial 1 also pays Janino
+    # compiles that trials 2-3 reuse.
     codegen_metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compile_hist = codegen_metrics.METRIC_COMPILATION_TIME()
     codegen_compiles: list[int] = []
     per_query: dict[str, float] = {}
     for trial in range(3):
         compiles_before = compile_hist.getCount()
-        # Warm the shared shingle index and time it as its own line. Ten
-        # dedup/text ops share this per-session persisted index (listed in
-        # _doc_shingles' docstring; dedup_simhash is not one of them, its
-        # signature pass reads the text itself); round 3 charged its
-        # one-time build to whichever dedup op benched first, which made
-        # round-over-round per-op deltas look like regressions (r2→r3
-        # dedup_near_minhash 0.92→1.74s was pure attribution). The
-        # family's true cost is shingle_build + the per-op marginals.
-        from cloud2sql_spark import memo
-        from cloud2sql_spark.queries.extensions import (
-            _capped_sr_meta,
-            _doc_shingles,
-            _exact_jaccard_pairs_shared,
-            _simhash_sig_frame,
-        )
-
-        memo.reset()
-        t0 = time.time()
-        _doc_shingles(spark, sf_dir, nonempty=True).count()
-        _doc_shingles(spark, sf_dir).count()
-        dt = round(time.time() - t0, 3)
-        per_query["shingle_build"] = min(
-            per_query.get("shingle_build", float("inf")), dt
-        )
-        # The three r14 session-memoized dedup indexes get their own
-        # timed lines, the shingle_build pattern (VERDICT r14 item 1 of
-        # "what's wrong"): charging each one-time build to whichever
-        # family key happened to bench first made per-key numbers
-        # trial-order dependent (dedup_ngram_capped absorbed the whole
-        # sr_meta build). Additive only — the per-key marginals below
-        # still rebuild nothing, and every index still derives from
-        # parquet inside this timed trial. Arguments mirror the
-        # consumers' call sites exactly (threshold 0.5, default df_cap)
-        # so the memo keys match. The truth and sr_meta lines ride on the
-        # shingle index warmed above; dedup_build_simhash_sig includes
-        # its own text pass.
-        for bname, bfn in (
-            (
-                "dedup_build_jaccard_truth",
-                lambda: _exact_jaccard_pairs_shared(spark, sf_dir, 0.5),
-            ),
-            ("dedup_build_simhash_sig", lambda: _simhash_sig_frame(spark, sf_dir)),
-            ("dedup_build_sr_meta", lambda: _capped_sr_meta(spark, sf_dir)),
-        ):
-            t0 = time.time()
-            bfn().count()
-            dt = round(time.time() - t0, 3)
-            per_query[bname] = min(per_query.get(bname, float("inf")), dt)
-        for key in headline:
-            fn = registry.get(key)
-            if fn is None:
-                continue
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            # noop sink, not count(): count() lets Catalyst prune every
-            # unreferenced projection column, so projection-heavy queries
-            # would be timed as near-empty scans (ADVICE r1). The noop
-            # writer materializes every output column and discards rows
-            # executor-side (no driver collect).
-            df.write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
-            per_query[key] = min(per_query.get(key, float("inf")), dt)
-        spark.catalog.clearCache()
+        for line, dt in run_trial(spark, registry, sf_dir, headline, trial).items():
+            per_query[line] = min(per_query.get(line, dt), dt)
         codegen_compiles.append(compile_hist.getCount() - compiles_before)
 
     total = round(sum(per_query.values()), 3)
-    r01_total = round(
-        sum(v for k, v in per_query.items() if k in set(R01_SET)), 3
-    )
     # like-for-like round deltas: the headline set GROWS every round, so the
     # raw total is not comparable across rounds. rNN_set_total restricts to
     # the frozen keys that round timed (r01: 29 keys; r02: 37; r03: 47;
@@ -407,7 +401,7 @@ def main(argv: list[str] | None = None) -> None:
         "unit": "sec",
         "queries": per_query,
         "n_queries": len(per_query),
-        "r01_set_total": r01_total,
+        "r01_set_total": _subtotal(R01_SET),
         "r02_set_total": _subtotal(R02_SET),
         "r03_set_total": _subtotal(R03_SET),
         "r04_set_total": _subtotal(R04_SET),
@@ -421,6 +415,10 @@ def main(argv: list[str] | None = None) -> None:
         # Janino compiles per trial (Spark's CodegenMetrics counter); near
         # 0 after trial 1 while the codegen cache holds the working set.
         "codegen_compiles": codegen_compiles,
+        # the CPU contract, checkable from the artifact: the master the
+        # session ran on and the parallelism it actually got
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     print(json.dumps(result))
     # Persist the full per-key recording in-repo (VERDICT r06 item 2): the

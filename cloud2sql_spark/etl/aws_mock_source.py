@@ -34,11 +34,10 @@ from pyspark.sql import functions as F
 
 from cloud2sql_spark.etl.mock_common import (
     CTIME as _CTIME,
-    NODES_SCHEMA,
     det_hash,
     envelope as _envelope,
 )
-from cloud2sql_spark.etl.model import Kind, KindCatalog
+from cloud2sql_spark.etl.model import NODES_SCHEMA, Kind, KindCatalog
 
 AWS_MOCK_KINDS = [
     Kind("aws_account"),

@@ -29,11 +29,10 @@ from pyspark.sql import functions as F
 
 from cloud2sql_spark.etl.mock_common import (
     CTIME as _CTIME,
-    NODES_SCHEMA,
     det_hash as _h,
     envelope as _envelope,
 )
-from cloud2sql_spark.etl.model import Kind, KindCatalog
+from cloud2sql_spark.etl.model import NODES_SCHEMA, Kind, KindCatalog
 
 DO_MOCK_KINDS = [
     Kind("digitalocean_team"),

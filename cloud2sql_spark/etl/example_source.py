@@ -14,7 +14,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cloud2sql_spark.etl.model import Kind, KindCatalog
+from cloud2sql_spark.etl.model import EDGES_SCHEMA, NODES_SCHEMA, Kind, KindCatalog
 
 EXAMPLE_KINDS = [
     Kind("example_account"),
@@ -96,9 +96,6 @@ _EDGES = [
     ("net1", "inst1", "example_network", "example_instance"),
     ("net2", "inst2", "example_network", "example_instance"),
 ]
-
-NODES_SCHEMA = "node_id STRING, kind STRING, payload STRING, cloud STRING, account STRING, region STRING"
-EDGES_SCHEMA = "from_id STRING, to_id STRING, from_kind STRING, to_kind STRING"
 
 
 def example_catalog() -> KindCatalog:

@@ -28,11 +28,10 @@ from pyspark.sql import functions as F
 
 from cloud2sql_spark.etl.mock_common import (
     CTIME as _CTIME,
-    NODES_SCHEMA,
     det_hash as _h,
     envelope as _envelope,
 )
-from cloud2sql_spark.etl.model import Kind, KindCatalog
+from cloud2sql_spark.etl.model import NODES_SCHEMA, Kind, KindCatalog
 
 GCP_MOCK_KINDS = [
     Kind("gcp_project"),

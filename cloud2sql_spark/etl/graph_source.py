@@ -43,23 +43,19 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-from cloud2sql_spark.etl.model import Kind, KindCatalog
-
-_NODE_FIELDS = ("node_id", "kind", "payload", "cloud", "account", "region")
-_EDGE_FIELDS = ("from_id", "to_id", "from_kind", "to_kind")
+from cloud2sql_spark.etl.model import EDGES_SCHEMA, NODES_SCHEMA, Kind, KindCatalog
 
 
-def _read_lines(spark: SparkSession, path: str, fields: tuple[str, ...]) -> DataFrame:
-    envelope = StructType([StructField(f, StringType()) for f in fields])
+def _read_lines(spark: SparkSession, path: str, envelope: StructType) -> DataFrame:
     return spark.read.schema(envelope).option("mode", "DROPMALFORMED").json(path)
 
 
 def read_graph(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Load the nodes and edges DataFrames from an exported graph."""
-    nodes = _read_lines(spark, os.path.join(path, "nodes"), _NODE_FIELDS)
-    edges = _read_lines(spark, os.path.join(path, "edges"), _EDGE_FIELDS)
+    nodes = _read_lines(spark, os.path.join(path, "nodes"), NODES_SCHEMA)
+    edges = _read_lines(spark, os.path.join(path, "edges"), EDGES_SCHEMA)
     return nodes, edges
 
 

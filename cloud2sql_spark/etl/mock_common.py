@@ -16,13 +16,6 @@ import json
 # Fixed resource creation time: mocks are fully deterministic (no clock).
 CTIME = "2023-06-01T00:00:00"
 
-# The node-envelope wire format every collector's executor-side fetch
-# emits; edges are derived from these rows DataFrame-side.
-NODES_SCHEMA = (
-    "node_id STRING, kind STRING, payload STRING, "
-    "cloud STRING, account STRING, region STRING"
-)
-
 
 def det_hash(*parts: object) -> int:
     """Deterministic 64-bit value from the md5 of the joined parts —
@@ -39,7 +32,7 @@ def envelope(
     account: str,
     region: str | None,
 ) -> dict:
-    """One node row in the shared wire format."""
+    """One node row in the shared wire format (model.NODES_SCHEMA)."""
     return {
         "node_id": payload["id"],
         "kind": kind,

@@ -61,6 +61,23 @@ CONTEXT_PROPERTIES: dict[str, str] = {
     "region": "string",
 }
 
+# The node/edge wire format every source emits and graph_source reads:
+# all-STRING envelopes. ``payload`` is one resource's JSON text, which
+# flatten parses with its kind's StructType; the trailing node fields are
+# the CONTEXT_PROPERTIES columns.
+NODES_SCHEMA = T.StructType(
+    [
+        T.StructField(f, T.StringType())
+        for f in ("node_id", "kind", "payload", *CONTEXT_PROPERTIES)
+    ]
+)
+EDGES_SCHEMA = T.StructType(
+    [
+        T.StructField(f, T.StringType())
+        for f in ("from_id", "to_id", "from_kind", "to_kind")
+    ]
+)
+
 
 @dataclass
 class Kind:

@@ -36,6 +36,7 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from cloud2sql_spark.etl import sinks
@@ -444,7 +445,7 @@ def distributed_collect(
     accounts: list[str],
     regions: list[str],
     fetch: Callable[[str, str], list[dict]],
-    result_schema: str,
+    result_schema: str | StructType,
 ) -> DataFrame:
     """Executor-side fetch (reference A16: per-account forks + per-region
     thread pools, config-template.yaml:17-32): build an accounts×regions

@@ -31,10 +31,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
-
-
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", True).csv(path)
 

@@ -2,12 +2,15 @@
 
 Synthesizes a 10x dataset in tmpfs by replicating sf0.1 with key offsets and
 content perturbation (so near-dup/similarity outputs stay O(n), not O(n²) by
-construction), then times selected queries at both scales and prints the
-ratio. A ratio near 10 is linear; >>10 flags an operator whose plan would
-not survive a 100 TB cluster. Dims (region/nation/customer/supplier/part)
-stay fixed — they are bounded in the reference's schema.
+construction), then times selected queries at both scales with bench.py's
+trial body (``run_trial``: noop sink, the four shared dedup build lines
+timed on their own, memo reset per trial) and prints the ratio of the
+per-scale minima. A ratio near 10 is linear; >>10 flags an operator whose
+plan would not survive a 100 TB cluster. Dims
+(region/nation/customer/supplier/part) stay fixed — they are bounded in
+the reference's schema.
 
-Usage: python scripts/scale_probe.py [replication]
+Usage: python scripts/scale_probe.py [replication] [KEY ...]
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import run_trial, warm_up
 from cloud2sql_spark.catalog import TABLES, load_table
 from cloud2sql_spark.registry import queries
 from cloud2sql_spark.session import get_spark
@@ -555,35 +559,34 @@ def main(argv: list[str] | None = None) -> None:
     # Variance protocol (README "Measured scaling"): host contention and
     # tmpfs writeback can inflate any single run 5-20×, so a ratio is only
     # believable from interleaved small/big trials in ONE session taking
-    # per-scale MINIMA. Default 1 trial for the broad sweep; use >=3 for
+    # per-scale MINIMA. Each trial is bench.run_trial at BASE, then at
+    # OUT: small and big are paired per trial (every probed key at one
+    # scale, then at the other), and the four shared dedup build lines get
+    # ratios too. Default 1 trial for the broad sweep; use >=3 for
     # confirming outliers.
     # floor at 1: a zero/negative value would skip the timing loop and
     # print inf/nan ratios after the expensive synthesis already ran
     trials = max(1, int(os.environ.get("SPARK_GRAFT_PROBE_TRIALS", "1")))
-    print(f"\n{'key':26s} {'sf0.1':>8s} {'10x':>8s} {'ratio':>6s}", flush=True)
-    for key in probe_keys:
-        fn = qs[key]
-        small = big = float("inf")
-        for _ in range(trials):
-            t0 = time.time()
-            fn(spark, BASE).count()
-            small = min(small, time.time() - t0)
-            spark.catalog.clearCache()
-            t0 = time.time()
-            fn(spark, OUT).count()
-            big = min(big, time.time() - t0)
-            spark.catalog.clearCache()
+    warm_up(spark, qs)
+    small: dict[str, float] = {}
+    big: dict[str, float] = {}
+    for trial in range(trials):
+        for best, sf_dir in ((small, BASE), (big, OUT)):
+            for line, dt in run_trial(spark, qs, sf_dir, probe_keys, trial).items():
+                best[line] = min(best.get(line, dt), dt)
+    print(f"\n{'key':26s} {'sf0.1':>8s} {f'{reps}x':>8s} {'ratio':>6s}", flush=True)
+    for line in small:
         note = ""
-        if key in QUADRATIC_BY_CONTRACT:
+        if line in QUADRATIC_BY_CONTRACT:
             note = "  (exact all-pairs ground truth: inherent work is "
             note += f"{reps * reps}x, linear gate does not apply)"
-        elif key in QUADRATIC_ON_REPLICA:
+        elif line in QUADRATIC_ON_REPLICA:
             note = "  (true pair set grows ~" + str(reps * reps)
             note += "x under a replica: linear gate applies per OUTPUT"
             note += " pair, not per input row)"
         print(
-            f"{key:26s} {small:7.1f}s {big:7.1f}s "
-            f"{big / max(small, 1e-9):5.1f}x{note}",
+            f"{line:26s} {small[line]:7.1f}s {big[line]:7.1f}s "
+            f"{big[line] / max(small[line], 1e-9):5.1f}x{note}",
             flush=True,
         )
 

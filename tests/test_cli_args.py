@@ -12,7 +12,9 @@ pinned, not a refactoring of them.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import subprocess
 import sys
 import time
@@ -59,6 +61,47 @@ def test_bench_rejects_unknown_arguments():
         r = _run("bench.py", *bad)
         assert r.returncode == 2, (bad, r.stderr)
         assert "unrecognized arguments" in r.stderr
+    assert _mtimes() == before
+
+
+def test_bench_filtered_run_end_to_end():
+    """A filtered sf0.001 bench run: stdout is the one JSON line with the
+    four shared build lines then the two keys, and the CPU contract; every
+    timed line reports once per trial on stderr; nothing is persisted."""
+    before = _mtimes()
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+        SPARK_GRAFT_BENCH_ONLY="agg_groupby,tpch_q6",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    r = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=_REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    lines = r.stdout.splitlines()
+    assert len(lines) == 1, r.stdout
+    result = json.loads(lines[0])
+    timed = [
+        "shingle_build",
+        "dedup_build_jaccard_truth",
+        "dedup_build_simhash_sig",
+        "dedup_build_sr_meta",
+        "agg_groupby",
+        "tpch_q6",
+    ]
+    assert list(result["queries"]) == timed
+    assert result["default_parallelism"] == 2
+    assert result["master"] == "local[2]"
+    # unanchored: Spark's console progress bar shares the stream
+    reported = re.findall(r"trial (\d): (\w+) \d+(?:\.\d+)?", r.stderr)
+    assert sorted(reported) == sorted((str(t), k) for t in range(3) for k in timed)
     assert _mtimes() == before
 
 

@@ -629,7 +629,7 @@ def test_run_in_order_fail_fast(spark):
 def _edges_source(extra_edges: list[tuple]):
     """Source factory: the example graph plus ``extra_edges`` rows of
     (from_id, to_id, from_kind, to_kind)."""
-    from cloud2sql_spark.etl.example_source import EDGES_SCHEMA
+    from cloud2sql_spark.etl.model import EDGES_SCHEMA
 
     def source_fn(sp):
         nodes, edges = collect_example(sp)
@@ -860,7 +860,7 @@ def test_link_kind_names_round_trip(spark, monkeypatch):
     import shutil
 
     from cloud2sql_spark.etl import pipeline
-    from cloud2sql_spark.etl.example_source import EDGES_SCHEMA
+    from cloud2sql_spark.etl.model import EDGES_SCHEMA
 
     pairs = list(zip(_ODD_KINDS, _ODD_KINDS[1:] + _ODD_KINDS[:1]))
     extra = [
